@@ -1,40 +1,31 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{DotLongArrays, FieldExpr, KmvAgg, MinHashAgg, ParseUrlTuple}
-import graft.plans.{GroupedTopKStrategy, MaterializedViewRewrite, RowNumberTopKRewrite}
+import graft.functions.GraftFunctions
+import graft.plans.{AsOfJoinStrategy, GroupedTopKStrategy, MaterializedViewRewrite, RowNumberTopKRewrite}
 
 /** SparkSessionExtensions entry point — the deployment-grade way to wire
-  * the engine's custom functions and planner strategy into ANY session:
+  * the engine's custom functions and planner strategies into ANY session:
+  * `.withExtensions(new GraftExtensions)` on its builder, or
+  * `--conf spark.sql.extensions=graft.GraftExtensions`.
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions)...
-  *   // or: --conf spark.sql.extensions=graft.GraftExtensions
-  *
-  * The per-query registration in GraftFunctions/PlansOps covers the
-  * driver-contract sessions this repo is run with; this class is the same
-  * surface packaged for cluster deployment (Hive analogue: registering
-  * UDFs + hooks via hive-site.xml [hive: ql/src/java/org/apache/hadoop/
-  * hive/ql/exec/FunctionRegistry.java]).
+  * It injects every function of [[GraftFunctions.all]] and the two
+  * strategies that [[GraftSession.install]] adds to a live session, plus
+  * two optimizer rules that only this path enables (Hive analogue:
+  * registering UDFs + hooks via hive-site.xml [hive: ql/src/java/org/
+  * apache/hadoop/hive/ql/exec/FunctionRegistry.java]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    def info(name: String) = new ExpressionInfo("graft", name)
-    e.injectFunction((FunctionIdentifier("field"), info("field"),
-      exprs => FieldExpr(exprs)))
-    e.injectFunction((FunctionIdentifier("minhash32"), info("minhash32"),
-      exprs => MinHashAgg(exprs.head).toAggregateExpression()))
-    e.injectFunction((FunctionIdentifier("parse_url_tuple"),
-      info("parse_url_tuple"), exprs => ParseUrlTuple(exprs.head)))
-    e.injectFunction((FunctionIdentifier("dotq"), info("dotq"),
-      exprs => DotLongArrays(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("kmv"), info("kmv"),
-      KmvAgg.builder))
-    e.injectFunction((FunctionIdentifier("zorder64"), info("zorder64"),
-      exprs => graft.functions.ZOrder64(exprs(0), exprs(1))))
+    GraftFunctions.all.foreach { case (name, builder) =>
+      e.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo("graft", name), builder))
+    }
     e.injectPlannerStrategy(_ => GroupedTopKStrategy)
+    e.injectPlannerStrategy(_ => AsOfJoinStrategy)
     // optimizer rule: row_number()<=k window filters (incl. SQL QUALIFY)
     // lower to the GroupedTopK operator when the rank column is dropped
     e.injectOptimizerRule(_ => RowNumberTopKRewrite)

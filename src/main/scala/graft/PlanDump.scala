@@ -2,13 +2,15 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Per-query formatted-plan dump for the optimization-round evidence
   * files (`plans/r17/<query>_<suffix>.txt`). Unlike [[Plans]] (one big
   * PLANS.md), this writes one file per query so before/after diffs of a
-  * touched query stay reviewable in isolation.
+  * touched query stay reviewable in isolation. Dump at the bench's scale
+  * and `SPARK_GRAFT_CPUS`: at a tiny SF size estimates broadcast-convert
+  * every join, so the dump would not show the strategies the measured
+  * plans pick.
   *
   * Run: sbt "runMain graft.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>"
   */
@@ -18,19 +20,12 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val names = args(3).split(",").toSeq
-    // bench-shaped session (optimization r18, VERDICT r17 item 3/8):
-    // the r17 dumps ran local[4] at a tiny SF, where size estimates
-    // broadcast-convert every join and the artifact can't evidence
-    // SMJ/SHJ claims; dumping at sf0.1 with the bench's core count
-    // shows the strategies the measured plans actually pick
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(logLevel = "ERROR")
+    // first line of every dump: what the plan was taken under, so a
+    // before/after diff of two dumps describes itself
+    val header = s"-- cpus=${spark.sparkContext.defaultParallelism} " +
+      s"shuffle.partitions=${spark.conf.get("spark.sql.shuffle.partitions")} " +
+      s"sf=$sfDir\n"
     // same explain discipline as Plans: no oracle-replay dumps, so the
     // artifact shows the full lineage instead of /tmp-dependent cache state
     System.setProperty("graft.noDumps", "1")
@@ -38,7 +33,7 @@ object PlanDump {
     names.foreach { name =>
       val p = SparkEntry.queries(name)(spark, sfDir)
         .queryExecution.explainString(ExplainMode.fromString("formatted"))
-      Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), p)
+      Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), header + p)
       graft.CacheScope.release()
       println(s"wrote $outDir/${name}_$suffix.txt")
     }

@@ -121,13 +121,18 @@ object SparkEntry {
     (PlansOps.queries, PlansOps.oracle),
     (MatViews.queries, MatViews.oracle))
 
+  /** Runs [[GraftSession.install]] on the session before building `q`,
+    * so every query finds the custom functions and strategies. */
+  private def installed(q: Q): Q = (s, dir) => q(GraftSession.install(s), dir)
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Aggregates.q1Pricing(spark, "/root/testdata/sf0.001")
+    installed(Aggregates.q1Pricing)(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.iterator.flatMap(_._1).toMap
+    modules.iterator.flatMap(_._1).map { case (k, q) => k -> installed(q) }
+      .toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */

@@ -376,14 +376,7 @@ object StressBench {
     val out = sys.env.getOrElse("SPARK_GRAFT_STRESS_DIR",
       "/tmp/graft_stress10x")
     val copies = sys.env.getOrElse("SPARK_GRAFT_STRESS_COPIES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     System.setProperty("graft.noDumps", "1")
     new java.io.File(out).mkdirs()
     build(spark, src, out, copies)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -21,14 +20,7 @@ object Verify {
       sys.props("graft.dumpDir") =
         new java.io.File(outDir.stripSuffix("/") + "_dumps",
           "minhash_sigs").getAbsolutePath
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Oracle-incompatible confs fail FAST (ADVICE r14): these knobs
     // change query OUTPUT (the policy-picked banding, a different IVF
     // cell count) while the DuckDB oracles replay the fixed defaults,

@@ -5,11 +5,11 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
-import graft.functions.GraftFunctions
+import graft.GraftSession
 import graft.ops.{Dedup, ScaleWindows}
 import org.apache.spark.sql.graft.PlanBridge
 
-import graft.plans.{AsOfJoinNode, AsOfJoinStrategy, GroupedTopKNode, GroupedTopKStrategy}
+import graft.plans.{AsOfJoinNode, GroupedTopKNode}
 
 /** The engine's PUBLIC operator API: the reusable, fixture-independent
   * form of the flagship operators the `q_*` contract queries exercise.
@@ -47,10 +47,7 @@ object Graft {
       forward: Boolean = false,
       nearest: Boolean = false): DataFrame = {
     val s = left.sparkSession
-    if (!s.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
+    GraftSession.install(s)
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def lAttr(n: String) = lPlan.output.find(_.name == n).getOrElse(
@@ -74,10 +71,7 @@ object Graft {
   def groupedTopK(df: DataFrame, groupCols: Seq[String],
       order: Seq[(String, Boolean)], k: Int): DataFrame = {
     val s = df.sparkSession
-    if (!s.experimental.extraStrategies.contains(GroupedTopKStrategy)) {
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ GroupedTopKStrategy
-    }
+    GraftSession.install(s)
     val child = df.queryExecution.analyzed
     def attr(n: String) = child.output.find(_.name == n).getOrElse(
       throw new IllegalArgumentException(s"column $n not found"))
@@ -121,7 +115,7 @@ object Graft {
       s"banding ($bands, $rows): bands*rows must divide the 32-perm " +
         "signature (a non-divisor would silently band only a prefix " +
         "of the permutations while est_jaccard still uses all 32)")
-    GraftFunctions.register(docs.sparkSession)
+    GraftSession.install(docs.sparkSession)
     val sh = docs
       .select(col(idCol).as("__id"), split(col(textCol), " ").as("t"))
       .select(col("__id"),
@@ -190,7 +184,7 @@ object Graft {
   def cosineTopK(candidates: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       excludeSelf: Boolean = true): DataFrame = {
-    GraftFunctions.register(candidates.sparkSession)
+    GraftSession.install(candidates.sparkSession)
     def quant(df: DataFrame, id: String, v: String) = df.select(
       col(idCol).as(id),
       expr(s"transform($vecCol, x -> CAST(round(CAST(x AS DOUBLE) " +
@@ -559,7 +553,7 @@ object Graft {
     require(thresholdPermille >= 1000L,
       s"thresholdPermille must be >= 1000 (balanced): $thresholdPermille")
     val s = embs.sparkSession
-    GraftFunctions.register(s)
+    GraftSession.install(s)
     val emb = graft.CacheScope.track(embs
       .select(col(idCol).as("vec_id"),
         expr(s"""transform($vecCol, x ->
@@ -603,7 +597,7 @@ object Graft {
   def kcenterInit(embs: DataFrame, idCol: String, vecCol: String,
       k: Int = 8): DataFrame = {
     require(k >= 2 && k <= 256, s"k out of range: $k")
-    GraftFunctions.register(embs.sparkSession)
+    GraftSession.install(embs.sparkSession)
     graft.ops.CorpusOps46.kcenterFrom(
       embs.select(col(idCol).as("vec_id"),
           expr(s"""transform($vecCol, x ->
@@ -615,7 +609,7 @@ object Graft {
 
   private def labeledQuant(embs: DataFrame, idCol: String,
       vecCol: String, labelCol: String): DataFrame = {
-    GraftFunctions.register(embs.sparkSession) // dotq used downstream
+    GraftSession.install(embs.sparkSession) // dotq used downstream
     embs.select(col(idCol).as("vec_id"), col(labelCol).as("label"),
       expr(s"""transform($vecCol, x ->
           CAST(round(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT))""")
@@ -712,7 +706,7 @@ object Graft {
     * facade stays bit-identical to `q_sim_margin_mine` there. */
   def marginMine(embs: DataFrame, idCol: String, vecCol: String,
       labelCol: String): DataFrame = {
-    GraftFunctions.register(embs.sparkSession)
+    GraftSession.install(embs.sparkSession)
     val q = embs.select(col(idCol).as("vec_id"),
         col(labelCol).as("label"),
         expr(s"""transform($vecCol, x ->
@@ -766,7 +760,7 @@ object Graft {
     * quadratic). Output: (va, vb, cos), va < vb. */
   def semanticDedup(vectors: DataFrame, idCol: String, vecCol: String,
       threshold: Double = 0.3, nprobe: Int = 6): DataFrame = {
-    GraftFunctions.register(vectors.sparkSession)
+    GraftSession.install(vectors.sparkSession)
     val emb = vectors.select(col(idCol).cast("long").as("vec_id"),
       expr(s"transform($vecCol, x -> CAST(round(CAST(x AS DOUBLE) " +
         "* 1000000, 0) AS BIGINT))").as("q"))
@@ -795,7 +789,7 @@ object Graft {
       k: Int = 0, rounds: Int = 3): DataFrame = {
     require(k == 0 || (k >= 2 && k <= 65536), s"k out of range: $k")
     require(rounds >= 1 && rounds <= 64, s"rounds out of range: $rounds")
-    GraftFunctions.register(embs.sparkSession)
+    GraftSession.install(embs.sparkSession)
     graft.ops.CorpusOps47.kmeansTrainFrom(
       embs.select(col(idCol).cast("long").as("vec_id"),
         expr(s"""transform($vecCol, x ->
@@ -925,7 +919,7 @@ object Graft {
     * `spark.graft.ivf.targetCellSize` default. */
   def ivfCellsFrontier(embs: DataFrame, idCol: String, vecCol: String)
       : DataFrame = {
-    GraftFunctions.register(embs.sparkSession)
+    GraftSession.install(embs.sparkSession)
     graft.ops.CorpusOps46.cellsFrontierFrom(
       quantIdVec(embs, idCol, vecCol),
       idBound(embs, idCol, "Graft.ivfCellsFrontier"))
@@ -938,7 +932,7 @@ object Graft {
     * the query-time latency dial, turnable without rebuilding. */
   def ivfNprobeFrontier(embs: DataFrame, idCol: String, vecCol: String)
       : DataFrame = {
-    GraftFunctions.register(embs.sparkSession)
+    GraftSession.install(embs.sparkSession)
     graft.ops.CorpusOps48.nprobeFrontierFrom(
       quantIdVec(embs, idCol, vecCol),
       idBound(embs, idCol, "Graft.ivfNprobeFrontier"))
@@ -1103,7 +1097,7 @@ object Graft {
     * set by design. */
   def anisotropyAudit(embs: DataFrame, idCol: String, vecCol: String,
       labelCol: String): DataFrame = {
-    GraftFunctions.register(embs.sparkSession)
+    GraftSession.install(embs.sparkSession)
     graft.ops.CorpusOps51.anisotropyFrom(
       embs.select(col(idCol).cast("long").as("vec_id"),
         col(labelCol).as("label"),
@@ -1200,7 +1194,7 @@ object Graft {
     * pipeline run" in the metric a user feels. */
   def retrainRecallAudit(embs: DataFrame, idCol: String,
       vecCol: String): DataFrame = {
-    GraftFunctions.register(embs.sparkSession)
+    GraftSession.install(embs.sparkSession)
     graft.ops.CorpusOps54.retrainRecallFrom(
       embs.select(col(idCol).cast("long").as("vec_id"),
         expr(s"""transform($vecCol, x ->
@@ -1217,7 +1211,7 @@ object Graft {
     * resolveCells dial; ids need not be dense or 0-based. */
   def nswSearch(embs: DataFrame, idCol: String, vecCol: String)
       : DataFrame = {
-    GraftFunctions.register(embs.sparkSession)
+    GraftSession.install(embs.sparkSession)
     val emb = quantIdVec(embs, idCol, vecCol)
     // kthLowest, not the 50-id prefetch: the auto-K seed set can
     // exceed 50 cells on a large corpus
@@ -1235,7 +1229,7 @@ object Graft {
     * family. */
   def nswRecallAudit(embs: DataFrame, idCol: String, vecCol: String)
       : DataFrame = {
-    GraftFunctions.register(embs.sparkSession)
+    GraftSession.install(embs.sparkSession)
     val emb = quantIdVec(embs, idCol, vecCol)
     val b = graft.ops.BoundedIds.kthLowest(emb, "vec_id",
       "Graft.nswRecallAudit")
@@ -1251,7 +1245,7 @@ object Graft {
     * (ef, n_queries, candidates, recall_at10_permille). */
   def nswEfFrontier(embs: DataFrame, idCol: String, vecCol: String)
       : DataFrame = {
-    GraftFunctions.register(embs.sparkSession)
+    GraftSession.install(embs.sparkSession)
     val emb = quantIdVec(embs, idCol, vecCol)
     val b = graft.ops.BoundedIds.kthLowest(emb, "vec_id",
       "Graft.nswEfFrontier")
@@ -1268,7 +1262,7 @@ object Graft {
     * recall_at10_permille). */
   def nswDegFrontier(embs: DataFrame, idCol: String, vecCol: String)
       : DataFrame = {
-    GraftFunctions.register(embs.sparkSession)
+    GraftSession.install(embs.sparkSession)
     val emb = quantIdVec(embs, idCol, vecCol)
     val b = graft.ops.BoundedIds.kthLowest(emb, "vec_id",
       "Graft.nswDegFrontier")
@@ -1287,7 +1281,7 @@ object Graft {
     * — bit-identical, the cost twin). */
   def nswInsertAudit(embs: DataFrame, idCol: String, vecCol: String)
       : DataFrame = {
-    GraftFunctions.register(embs.sparkSession)
+    GraftSession.install(embs.sparkSession)
     val emb = quantIdVec(embs, idCol, vecCol)
     val b = graft.ops.BoundedIds.kthLowest(emb, "vec_id",
       "Graft.nswInsertAudit")
@@ -1419,7 +1413,7 @@ object Graft {
     * broadcast-codebook encode pass per m. */
   def pqDistortion(embs: DataFrame, idCol: String, vecCol: String)
       : DataFrame = {
-    GraftFunctions.register(embs.sparkSession)
+    GraftSession.install(embs.sparkSession)
     graft.ops.CorpusOps69.pqDistortionFrom(
       embs.select(col(idCol).cast("long").as("vec_id"),
         expr(s"""transform($vecCol, x ->
@@ -1512,7 +1506,7 @@ object Graft {
     * partial sums. */
   def embScatter(embs: DataFrame, idCol: String, vecCol: String,
       labelCol: String): DataFrame = {
-    GraftFunctions.register(embs.sparkSession)
+    GraftSession.install(embs.sparkSession)
     graft.ops.CorpusOps64.embScatterFrom(
       embs.select(col(idCol).cast("long").as("vec_id"),
         col(labelCol).cast("long").as("label"),
@@ -1610,7 +1604,7 @@ object Graft {
     * show what halving the sketch costs on THIS corpus. */
   def minhashPermCurve(docs: DataFrame, idCol: String,
       textCol: String): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
+    GraftSession.install(docs.sparkSession)
     val d = docs.select(col(idCol).cast("long").as("doc_id"),
       col(textCol).as("text"))
     val sigs = graft.ops.Dedup.shingledDocs(d)
@@ -1629,7 +1623,7 @@ object Graft {
     * pair universe = the df-capped exact shingle pair stream. */
   def minhashEstError(docs: DataFrame, idCol: String,
       textCol: String): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
+    GraftSession.install(docs.sparkSession)
     val d = docs.select(col(idCol).cast("long").as("doc_id"),
       col(textCol).as("text"))
     val sigs = graft.ops.Dedup.shingledDocs(d)
@@ -1675,7 +1669,7 @@ object Graft {
     * scalar tripwire. One broadcast-centroid scan; 16-row output. */
   def embCellDrift(embs: DataFrame, idCol: String, vecCol: String,
       inA: Column): DataFrame = {
-    GraftFunctions.register(embs.sparkSession)
+    GraftSession.install(embs.sparkSession)
     val q = embs.select(col(idCol).cast("long").as("vec_id"),
       expr(s"""transform($vecCol, x ->
           CAST(round(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT))""")

@@ -1,32 +1,30 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.graft.PlanBridge
 
-/** Registration point for the engine's custom functions — the Spark
-  * analogue of Hive's FunctionRegistry.registerUDF calls
+/** The engine's custom functions — the Spark analogue of Hive's
+  * FunctionRegistry.registerUDF calls
   * [hive: ql/src/java/org/apache/hadoop/hive/ql/exec/FunctionRegistry.java].
-  * After `register(spark)`, the functions are usable from both the SQL
+  * This table is the only list: [[graft.GraftSession.install]] registers
+  * it into a live session and [[graft.GraftExtensions]] injects it at
+  * session build time, after which each name is usable from both the SQL
   * front-end and `expr(...)` in DataFrame code.
   */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "field", exprs => FieldExpr(exprs), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash32", exprs => MinHashAgg(exprs.head).toAggregateExpression(),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "parse_url_tuple", exprs => ParseUrlTuple(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("kmv", KmvAgg.builder, "built-in")
-    reg.createOrReplaceTempFunction(
-      "dotq", exprs => DotLongArrays(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "zorder64", exprs => ZOrder64(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "edit_dl", exprs => DamerauLevenshteinExpr(exprs(0), exprs(1)),
-      "built-in")
-    spark.udf.register("wavg", udaf(WeightedAvg))
-  }
+  val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "field" -> (exprs => FieldExpr(exprs)),
+    "minhash32" -> (exprs => MinHashAgg(exprs.head).toAggregateExpression()),
+    "parse_url_tuple" -> (exprs => ParseUrlTuple(exprs.head)),
+    "kmv" -> KmvAgg.builder,
+    "dotq" -> (exprs => DotLongArrays(exprs(0), exprs(1))),
+    "zorder64" -> (exprs => ZOrder64(exprs(0), exprs(1))),
+    "edit_dl" -> (exprs => DamerauLevenshteinExpr(exprs(0), exprs(1))),
+    "wavg" -> (exprs => wavg(exprs)))
+
+  // the typed Aggregator as `spark.udf.register` would wrap it; lazy so
+  // that installing the table derives no encoders until wavg is used
+  private lazy val wavg =
+    PlanBridge.aggregatorBuilder(udaf(WeightedAvg).withName("wavg"))
 }

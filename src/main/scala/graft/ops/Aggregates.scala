@@ -264,7 +264,6 @@ object Aggregates {
     * 128 KiB bounded state per group, map-side mergeable) is
     * error-bounded in SketchSpec. */
   val qAggThetaSketch: Q = (s, dir) => {
-    graft.functions.GraftFunctions.register(s)
     val sh = Tables(s, dir, "documents")
       .filter(col("source").isin("src0", "src1", "src2", "src3"))
       .select(col("source"), split(col("text"), " ").as("t"))

@@ -224,7 +224,6 @@ object CorpusOps12 {
     * the q_bpe discipline) — length-blocked (|len diff| ≤ 2 prunes
     * before any DP runs) and broadcast. */
   val qFnEditDl: Q = (s, dir) => {
-    graft.functions.GraftFunctions.register(s)
     val vocab = Tables(s, dir, "part")
       .select(explode(split(col("p_name"), " ")).as("w"))
       .distinct()

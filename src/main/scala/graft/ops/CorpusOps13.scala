@@ -165,7 +165,6 @@ object CorpusOps13 {
     * and the zones come free from footer min/max. The audit output is
     * 3 rows regardless of input size; bench-skipped by design. */
   val qLayoutZonemapAudit: Q = (s, dir) => {
-    graft.functions.GraftFunctions.register(s)
     val t = Tables(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_linenumber").as("ln"),
         (col("l_partkey") % 64).as("a"), (col("l_suppkey") % 64).as("b"))

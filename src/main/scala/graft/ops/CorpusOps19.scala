@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** Corpus operators, r10 wave 1 (SURVEY.md §2.M): the URL/domain
   * pipeline stage (Penedo et al. 2023, "The RefinedWeb Dataset for
@@ -28,7 +27,6 @@ object CorpusOps19 {
     * corpus size. */
   private def urlView(s: org.apache.spark.sql.SparkSession, dir: String,
       view: String): Unit = {
-    GraftFunctions.register(s)
     Tables(s, dir, "documents")
       .withColumn("h",
         conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)

@@ -121,7 +121,6 @@ object CorpusOps26 {
     * one pass, and both per-query top-5 row_number filters lower to
     * WindowGroupLimit (no full sort of the candidate set). */
   val qSimMips: Q = (s, dir) => {
-    graft.functions.GraftFunctions.register(s)
     val emb = EmbQuant.quantized(s, dir)
       .withColumn("n2", EmbQuant.dotq(col("q"), col("q")))
     val queries = emb.filter(col("vec_id") < 10)

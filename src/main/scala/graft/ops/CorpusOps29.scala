@@ -48,7 +48,6 @@ object CorpusOps29 {
     * shape — query side broadcast, candidates stream, top-5 lowers to
     * WindowGroupLimit), then two 50-row membership joins. */
   val qEmbMatryoshka: Q = (s, dir) => {
-    graft.functions.GraftFunctions.register(s)
     val emb = EmbQuant.quantized(s, dir)
     val full = graft.CacheScope.track(topkAt(emb, 64, "nb").persist())
     val t16 = topkAt(emb, 16, "nb16")

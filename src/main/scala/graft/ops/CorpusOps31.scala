@@ -55,7 +55,6 @@ object CorpusOps31 {
     * a fixed sampling rate that keeps the estimate unbiased at any
     * corpus size; the histogram is occurrence-bounded. */
   val qEmbHubness: Q = (s, dir) => {
-    graft.functions.GraftFunctions.register(s)
     val emb = EmbQuant.quantized(s, dir)
       .withColumn("n2", EmbQuant.dotq(col("q"), col("q")))
     val queries = emb.filter(col("vec_id") % 10 === 0)

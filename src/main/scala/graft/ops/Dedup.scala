@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** Deduplication operators for a training-data pipeline (north star /
   * SURVEY.md §2.M): exact hash dedup, exact n-gram Jaccard, MinHash+LSH
@@ -255,7 +254,6 @@ object Dedup {
     * read ONE dump. */
   private[ops] def sigFrame(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    GraftFunctions.register(s)
     // same 3-gram shingles as the exact-Jaccard baseline: single-token
     // sets are near-identical across this small-vocab corpus, so only
     // shingles give a discriminative Jaccard.
@@ -351,7 +349,6 @@ object Dedup {
     * count rides each row as `dropped_keys`, so the reported recall
     * stays honest about what the cap cost. */
   val qDedupLshSweep: Q = (s, dir) => {
-    GraftFunctions.register(s)
     val sigs = graft.CacheScope.track(shingled(s, dir)
       .withColumn("th", xxhash64(col("g")))
       .groupBy(col("doc_id"))

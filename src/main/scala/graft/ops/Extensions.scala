@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** Extension-surface exemplars (SURVEY.md §2.K): every Hive UDF extension
   * API re-expressed the Spark-native way and pinned by the oracle —
@@ -18,7 +17,6 @@ object Extensions {
 
   /** Custom scalar expression: Hive field() with real codegen. */
   val qUdfField: Q = (s, dir) => {
-    GraftFunctions.register(s)
     Tables(s, dir, "orders").createOrReplaceTempView("ext_orders")
     s.sql("""
       SELECT field(o_orderstatus, 'F', 'O', 'P') AS status_idx,
@@ -32,7 +30,6 @@ object Extensions {
 
   /** Typed Aggregator: exact weighted average (price weighted by size). */
   val qUdafWeightedAvg: Q = (s, dir) => {
-    GraftFunctions.register(s)
     Tables(s, dir, "part")
       .groupBy(col("p_brand"))
       .agg(expr("wavg(p_retailprice, CAST(p_size AS BIGINT))").as("wavg_price"),
@@ -42,7 +39,6 @@ object Extensions {
 
   /** Custom Generator: parse_url_tuple over constructed URLs. */
   val qUdtfParseUrl: Q = (s, dir) => {
-    GraftFunctions.register(s)
     Tables(s, dir, "documents").createOrReplaceTempView("ext_docs")
     s.sql("""
       SELECT doc_id, t.protocol, t.host, t.path, t.query
@@ -62,7 +58,6 @@ object Extensions {
     * columns after a z-ordered write (ExtensionsSpec asserts the bbox
     * bound; the oracle replays the interleave bit-exactly). */
   val qZorderCluster: Q = (s, dir) => {
-    GraftFunctions.register(s)
     Tables(s, dir, "lineitem")
       .select((col("l_partkey") % 64).cast("long").as("a"),
         (col("l_suppkey") % 64).cast("long").as("b"))

@@ -1,10 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.PlanBridge
 import graft.Tables
-import graft.plans.{AsOfJoinNode, AsOfJoinStrategy, GroupedTopKNode, GroupedTopKStrategy}
 
 /** Queries backed by the engine's custom plan nodes (SURVEY.md §2.F /
   * §7.3 tier (c): LogicalPlan + SparkStrategy + SparkPlan). */
@@ -14,28 +11,14 @@ object PlansOps {
     * semantics as q_window_topk_group (the oracle is that formulation)
     * but executed with bounded per-partition heaps + candidate-only
     * shuffle instead of a full shuffle + sort. */
-  val qTopKGrouped: Q = (s, dir) => {
-    if (!s.experimental.extraStrategies.contains(GroupedTopKStrategy)) {
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ GroupedTopKStrategy
-    }
-    val li = Tables(s, dir, "lineitem")
-    val child = li.queryExecution.analyzed
-    def attr(n: String) = child.output.find(_.name == n).get
-    val node = GroupedTopKNode(
-      grouping = Seq(attr("l_suppkey")),
-      ordering = Seq(
-        SortOrder(attr("l_extendedprice"), Descending),
-        SortOrder(attr("l_orderkey"), Ascending),
-        SortOrder(attr("l_linenumber"), Ascending)),
-      k = 3,
-      child = child)
-    PlanBridge.ofRows(s, node)
+  val qTopKGrouped: Q = (s, dir) =>
+    graft.api.Graft.groupedTopK(Tables(s, dir, "lineitem"), Seq("l_suppkey"),
+        Seq("l_extendedprice" -> false, "l_orderkey" -> true,
+          "l_linenumber" -> true), k = 3)
       .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
         col("l_extendedprice"))
       .orderBy(col("l_suppkey"), col("l_extendedprice").desc,
         col("l_orderkey"), col("l_linenumber"))
-  }
 
   /** Results-cache hit path as a declared query (VERDICT r7 item 3):
     * the same aggregate runs twice through
@@ -63,25 +46,14 @@ object PlansOps {
     * each click. Same oracle SQL as q_join_asof — the two engines AND
     * the two Spark formulations must all agree. */
   val qJoinAsofCustom: Q = (s, dir) => {
-    if (!s.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
     val ev = Tables(s, dir, "events")
     val clicks = ev.filter(col("event_type") === "click")
       .select(col("user_id"), col("ts"), col("event_id"))
     val buys = ev.filter(col("event_type") === "purchase")
       .select(col("user_id").as("b_user"), col("ts").as("b_ts"),
         col("event_id").as("pid"))
-    val lPlan = clicks.queryExecution.analyzed
-    val rPlan = buys.queryExecution.analyzed
-    def lAttr(n: String) = lPlan.output.find(_.name == n).get
-    def rAttr(n: String) = rPlan.output.find(_.name == n).get
-    val node = AsOfJoinNode(lPlan, rPlan,
-      leftKeys = Seq(lAttr("user_id")), rightKeys = Seq(rAttr("b_user")),
-      leftTime = lAttr("ts"), rightTime = rAttr("b_ts"),
-      rightTiebreak = Seq(SortOrder(rAttr("pid"), Ascending)))
-    PlanBridge.ofRows(s, node)
+    graft.api.Graft.asofJoin(clicks, buys,
+        Seq("user_id"), Seq("b_user"), "ts", "b_ts", Seq("pid"))
       .select(col("user_id"), col("event_id").as("click_id"),
         Tables.fmtTsUs(col("ts")).as("click_ts"),
         col("pid").as("asof_pid"))

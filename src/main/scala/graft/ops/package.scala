@@ -15,7 +15,6 @@ package object ops {
     * EVERY consumer, not a silent divergence between modules. */
   private[ops] object EmbQuant {
     def quantized(s: SparkSession, dir: String): DataFrame = {
-      graft.functions.GraftFunctions.register(s)
       Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
           expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT))")

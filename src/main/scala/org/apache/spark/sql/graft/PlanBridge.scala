@@ -1,7 +1,10 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
+import org.apache.spark.sql.expressions.{UserDefinedAggregator, UserDefinedFunction}
 
 /** Bridges a custom LogicalPlan node into the public Dataset API.
   * `Dataset.ofRows` is private[sql], so this one-file shim lives under the
@@ -12,4 +15,13 @@ object PlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** SQL builder of a typed-Aggregator UDF (`functions.udaf(...)`), the
+    * one `spark.udf.register` installs; `UserDefinedAggregator` is
+    * private[sql], and a session extension needs the bare builder. */
+  def aggregatorBuilder(udf: UserDefinedFunction)
+      : Seq[Expression] => Expression = {
+    val u = udf.asInstanceOf[UserDefinedAggregator[_, _, _]]
+    exprs => ScalaAggregator(u, exprs)
+  }
 }

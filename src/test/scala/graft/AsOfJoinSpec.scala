@@ -69,11 +69,7 @@ class AsOfJoinSpec extends AnyFunSuite {
     val rPlan = rDf.queryExecution.analyzed
     def a(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
         n: String) = p.output.find(_.name == n).get
-    if (!spark.experimental.extraStrategies
-        .contains(graft.plans.AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
-    }
+    GraftSession.install(spark)
     val node = graft.plans.AsOfJoinNode(lPlan, rPlan,
       leftKeys = Seq(a(lPlan, "k")), rightKeys = Seq(a(rPlan, "rk")),
       leftTime = a(lPlan, "t"), rightTime = a(rPlan, "rt"),

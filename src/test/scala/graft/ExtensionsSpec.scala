@@ -3,15 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.GraftFunctions
-
 /** Custom extension surface (SURVEY.md §2.K): expression semantics,
   * codegen participation, generator null-handling, script transform. */
 class ExtensionsSpec extends AnyFunSuite {
   import TestSpark._
 
   test("field() semantics incl. no-match and null") {
-    GraftFunctions.register(spark)
+    GraftSession.install(spark)
     val r = spark.sql(
       """SELECT field('b', 'a', 'b', 'c') AS hit,
                 field('z', 'a', 'b', 'c') AS miss,
@@ -20,7 +18,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("field() survives whole-stage codegen over a table") {
-    GraftFunctions.register(spark)
+    GraftSession.install(spark)
     Tables(spark, sf, "orders").createOrReplaceTempView("o_cg")
     val df = spark.sql(
       "SELECT field(o_orderstatus, 'F', 'O', 'P') AS i FROM o_cg")
@@ -31,7 +29,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("zorder64 interleaves bits exactly and runs in whole-stage codegen") {
-    GraftFunctions.register(spark)
+    GraftSession.install(spark)
     // bit-exact: a's bit i -> 2i, b's bit i -> 2i+1
     val r = spark.sql(
       """SELECT zorder64(0L, 0L) AS z0,
@@ -70,7 +68,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("parse_url_tuple handles malformed and null urls") {
-    GraftFunctions.register(spark)
+    GraftSession.install(spark)
     val rows = spark.sql(
       """SELECT t.* FROM (SELECT 'ht!tp://###bad' AS u) x
          LATERAL VIEW parse_url_tuple(u) t AS p, h, pa, q""").collect()
@@ -82,7 +80,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("minhash32 partial/merge invariance: repartitioned input, same sig") {
-    GraftFunctions.register(spark)
+    GraftSession.install(spark)
     val toks = Tables(spark, sf, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       .withColumn("th", xxhash64(col("tok")))
@@ -93,7 +91,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("weighted avg aggregator matches direct exact computation") {
-    GraftFunctions.register(spark)
+    GraftSession.install(spark)
     val got = SparkEntry.queries("q_udaf_weighted_avg")(spark, sf)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     val exp = Tables(spark, sf, "part")

@@ -3,8 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The SparkSessionExtensions deployment path: a FRESH session built with
-  * `.withExtensions(new GraftExtensions)` gets every custom function and
-  * the GroupedTopK planner strategy with no per-query registration.
+  * `.withExtensions(new GraftExtensions)` gets every custom function of
+  * `GraftFunctions.all` and the planner strategies with no registration.
   *
   * A SparkSession with extensions must be the first in its JVM
   * (getOrCreate reuses the suite-shared session and ignores extensions,
@@ -40,6 +40,18 @@ object ExtCheckMain {
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    // every name of the one function table resolves with no registration
+    val missing = graft.functions.GraftFunctions.all.map(_._1)
+      .filterNot(s.catalog.functionExists)
+    require(missing.isEmpty, s"not injected: $missing")
+    val dl = s.sql(
+      """SELECT edit_dl('abcd', 'acbd') AS t, edit_dl('kitten', 'sitting') AS k""")
+      .collect().head
+    require(dl.getInt(0) == 1 && dl.getInt(1) == 3, s"edit_dl: $dl")
+    val wavg = s.sql(
+      """SELECT wavg(x, w) FROM VALUES (1.0D, 1L), (3.0D, 3L) AS t(x, w)""")
+      .collect().head.getDouble(0)
+    require(wavg == 2.5, s"wavg: $wavg")
     val r = s.sql(
       """SELECT field('b', 'a', 'b') AS f,
                 dotq(array(1L, 2L), array(3L, 4L)) AS d""").collect().head

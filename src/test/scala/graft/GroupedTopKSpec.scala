@@ -6,7 +6,7 @@ import org.apache.spark.sql.graft.PlanBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Tables
-import graft.plans.{GroupedTopKNode, GroupedTopKStrategy}
+import graft.plans.GroupedTopKNode
 
 /** Memory-contract and edge-case coverage for the GroupedTopK operator
   * (r02 VERDICT #3 / ADVICE): bounded partial state under high group
@@ -15,14 +15,8 @@ import graft.plans.{GroupedTopKNode, GroupedTopKStrategy}
 class GroupedTopKSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def ensureStrategy(): Unit =
-    if (!spark.experimental.extraStrategies.contains(GroupedTopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GroupedTopKStrategy
-    }
-
   private def topK(groupCols: Seq[String], k: Int, maxPartialGroups: Int) = {
-    ensureStrategy()
+    GraftSession.install(spark)
     val li = Tables(spark, sf, "lineitem")
     val child = li.queryExecution.analyzed
     def attr(n: String) = child.output.find(_.name == n).get
@@ -76,7 +70,7 @@ class GroupedTopKSpec extends AnyFunSuite {
 
   test("optimizer rule lowers row_number<=k + drop(rn) to GroupedTopK") {
     import spark.implicits._
-    ensureStrategy()
+    GraftSession.install(spark)
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ graft.plans.RowNumberTopKRewrite
     try {

@@ -63,7 +63,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("custom dot-product expression participates in whole-stage codegen") {
-    graft.functions.GraftFunctions.register(spark)
+    GraftSession.install(spark)
     Tables(spark, sf, "embeddings").createOrReplaceTempView("emb_cg")
     val df = spark.sql(
       """SELECT vec_id, dotq(q, q) AS n2 FROM (

@@ -10,7 +10,7 @@ class SketchSpec extends AnyFunSuite {
   import TestSpark._
 
   private def hashes = {
-    functions.GraftFunctions.register(spark)
+    GraftSession.install(spark)
     Tables(spark, sf, "documents")
       .select(explode(split(col("text"), " ")).as("tok"),
         col("doc_id"))

@@ -679,7 +679,7 @@ class StreamingSpec extends AnyFunSuite {
     // full corpus — the same append-only-delta + rollup discipline as
     // the streaming MV test, applied to ANN posting state. Exact
     // integer micro-quantized cosine, so stream == batch bit-for-bit.
-    graft.functions.GraftFunctions.register(spark)
+    GraftSession.install(spark)
     val srcDir = Files.createTempDirectory("ivf_stream").toFile
     srcDir.deleteOnExit()
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -904,7 +904,7 @@ class StreamingSpec extends AnyFunSuite {
     // built from them — equal the batch Lloyd loop bit-for-bit.
     val srcDir = Files.createTempDirectory("km_stream").toFile
     srcDir.deleteOnExit()
-    graft.functions.GraftFunctions.register(spark)
+    GraftSession.install(spark)
     def quant(df: org.apache.spark.sql.DataFrame) = df
       .select(col("vec_id"), expr(
         """transform(embedding, x ->
@@ -1414,7 +1414,7 @@ class StreamingSpec extends AnyFunSuite {
     // the index.
     val srcDir = Files.createTempDirectory("nsw_stream").toFile
     srcDir.deleteOnExit()
-    graft.functions.GraftFunctions.register(spark)
+    GraftSession.install(spark)
     def quant(df: org.apache.spark.sql.DataFrame) = df
       .select(col("vec_id"), expr(
         """transform(embedding, x ->
@@ -1569,7 +1569,7 @@ class StreamingSpec extends AnyFunSuite {
     // drift tripwire runs standing, with no vector ever reprocessed.
     val srcDir = Files.createTempDirectory("celldrift_stream").toFile
     srcDir.deleteOnExit()
-    graft.functions.GraftFunctions.register(spark)
+    GraftSession.install(spark)
     val parity = expr(
       """pmod(CAST(conv(substring(md5(CAST(vec_id AS STRING)),
           1, 15), 16, 10) AS BIGINT), 2)""") === 0

@@ -2,20 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for every suite (SURVEY.md §5.2). */
+/** One shared local session for every suite (SURVEY.md §5.2). The suites
+  * pin 8 threads and partitions whatever `SPARK_GRAFT_CPUS` says, so test
+  * plans and timings do not move with the host's core count. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft_wh").toFile
     wh.deleteOnExit()
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", wh.getAbsolutePath)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
+    GraftSession.local(cpus = 8, logLevel = "ERROR",
+      conf = Map("spark.sql.warehouse.dir" -> wh.getAbsolutePath))
   }
   val sf: String = "/root/testdata/sf0.001"
 }

@@ -48,7 +48,7 @@ class Wave29Spec extends AnyFunSuite {
     // z-order boxes at the SAME 96-cell bucketing (q_zorder_cluster
     // itself stays on its aligned-tile 64 bucketing, where both curves
     // are trivially 8x8; 96 = 1.5 tiles is where locality differs)
-    graft.functions.GraftFunctions.register(spark)
+    GraftSession.install(spark)
     val z = Tables(spark, sf01, "lineitem")
       .select((col("l_partkey") % 64).cast("long").as("a"),
         (col("l_suppkey") % 64).cast("long").as("b"))

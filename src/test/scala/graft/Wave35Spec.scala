@@ -76,10 +76,12 @@ class Wave35Spec extends AnyFunSuite {
   // Conf toggles ride an isolated newSession(): suites run in
   // parallel on ONE shared session, so a global set/unset would race
   // other suites' conf reads (caught live — PlanSpec's gate pin read
-  // the default limit after this suite's finally-unset).
+  // the default limit after this suite's finally-unset). The ops
+  // builders below are called directly, not through SparkEntry.queries,
+  // so the fresh session is installed here.
   private def withConf[A](kvs: (String, String)*)(
       f: org.apache.spark.sql.SparkSession => A): A = {
-    val s2 = spark.newSession()
+    val s2 = GraftSession.install(spark.newSession())
     kvs.foreach { case (k, v) => s2.conf.set(k, v) }
     try f(s2) finally CacheScope.release()
   }

@@ -94,7 +94,7 @@ class Wave37Spec extends AnyFunSuite {
     val tiny = Seq((0L, Seq(1000000L, 0L)), (1L, Seq(0L, 1000000L)),
       (2L, Seq(700000L, 700000L)))
       .toDF("vec_id", "q")
-    functions.GraftFunctions.register(spark)
+    GraftSession.install(spark)
     val out = try ops.CorpusOps47.kmeansTrainFrom(tiny, 16, 2)
         .collect().toSeq
       finally CacheScope.release()

@@ -51,7 +51,7 @@ class Wave38Spec extends AnyFunSuite {
       (101L, Seq(0L, 1000000L)), (102L, Seq(-700000L, 700000L)),
       (103L, Seq(900000L, 100000L)))
       .toDF("vec_id", "q")
-    functions.GraftFunctions.register(spark)
+    GraftSession.install(spark)
     val out = try ops.CorpusOps47.kmeansTrainFrom(shifted, 2, 2)
         .collect().toSeq
       finally CacheScope.release()
