@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.types.{DecimalType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DecimalType, LongType, StructType, TimestampNTZType, TimestampType}
+
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 
 /** Fixture-table access + hash-stability helpers shared by every query.
   *
@@ -16,6 +19,16 @@ import org.apache.spark.sql.types.{DecimalType, LongType, TimestampNTZType, Time
   * Scale note: reads go through `spark.read.parquet`, so Catalyst predicate
   * pushdown / column pruning / partition pruning all apply unchanged when the
   * path is a 100 TB partitioned directory instead of a single file.
+  *
+  * Schema cache: inferring a parquet file's schema starts a one-task footer
+  * job, so the `StructType` inferred for a table FILE is kept and later reads
+  * pass it to `.schema(...)`. The key is the file's real path, its NIO file
+  * key, size and last-modified time, and every `spark.sql.parquet.*` /
+  * `spark.sql.legacy.parquet.*` conf the session sets (`nanosAsLong`, which
+  * [[events]] sets, among them): a rewritten file or a changed conf is
+  * inferred again. A directory path is never cached, since files can appear
+  * in it without touching the directory's own attributes. Every call still
+  * builds a fresh DataFrame and file index.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -24,7 +37,35 @@ object Tables {
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") events(spark, dir) else
-      spark.read.parquet(s"$dir/$name.parquet")
+      read(spark, s"$dir/$name.parquet")
+  }
+
+  private final case class SchemaKey(path: String, fileKey: AnyRef,
+      size: Long, modified: FileTime, confs: Map[String, String])
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]()
+
+  /** `spark.read.parquet(path)`, with the schema cache described above. */
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    val file = scala.util.Try {
+      val real = Paths.get(path).toRealPath()
+      (real, Files.readAttributes(real, classOf[BasicFileAttributes]))
+    }.toOption.filter(_._2.isRegularFile)
+    file match {
+      case None => spark.read.parquet(path)
+      case Some((real, a)) =>
+        val key = SchemaKey(real.toString, a.fileKey, a.size,
+          a.lastModifiedTime, spark.conf.getAll.filter { case (k, _) =>
+            k.startsWith("spark.sql.parquet.") ||
+              k.startsWith("spark.sql.legacy.parquet.")
+          })
+        val schema = Option(schemas.get(key)).getOrElse {
+          val inferred = spark.read.parquet(path).schema
+          schemas.put(key, inferred)
+          inferred
+        }
+        spark.read.schema(schema).parquet(path)
+    }
   }
 
   /** The events fixture has shipped with two physical types for `ts` across
@@ -45,7 +86,7 @@ object Tables {
     // common path does not mutate session conf on every call.
     if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventsTs(spark.read.parquet(s"$dir/events.parquet"))
+    normalizeEventsTs(read(spark, s"$dir/events.parquet"))
   }
 
   /** Apply the generation-conditional `ts` normalization described on

@@ -455,13 +455,12 @@ object Graft {
     * space-tokenized text column: `merges` rounds of
     * pick-best-adjacent-pair → merge over the frequency-weighted word
     * dictionary, returning the learned merge table (`round`, `merge`,
-    * `cnt` at pick) — the artifact a tokenizer ships. Ties break
-    * lexicographically on the pair.
+    * `cnt` at pick) — the artifact a tokenizer ships. Ties break on
+    * the pair in UTF-8 byte order (Spark's string order).
     *
     * Scale: the corpus collapses to the |V|-row dictionary in ONE
-    * scan; each round is dictionary-sized (the per-round winner is a
-    * bounded scalar driver action and the merge applies as a map-side
-    * literal rewrite, keeping the plan linear in rounds). */
+    * scan, which the driver collects once: the rounds run in memory
+    * over its |V| `(freq, sym)` rows. */
   /** WordPiece trainer (Schuster & Nakajima 2012 — the BERT
     * algorithm, the [[bpeTrain]] sibling): picks the highest
     * LIKELIHOOD-GAIN pair, score = count(l r)/(count(l)·count(r)),

@@ -14,7 +14,7 @@ import graft.Tables
   * before frequent-but-independent ones. Same dictionary
   * symbolization, same boundary-anchored merge application, same
   * 6-round loop as the BPE trainer (shared code: symbolizedDocs,
-  * pairCounts, anchoredMerge) — ONLY the pick rule differs, which is
+  * trainMerges) — ONLY the pick rule differs, which is
   * exactly how the two algorithms differ in the literature.
   *
   * Determinism: the score ranks via ONE IEEE double division of
@@ -24,9 +24,10 @@ import graft.Tables
   * ingredients (cnt, left_cnt, right_cnt), never the double.
   *
   * Scale: the corpus collapses to the |V|-row dictionary in ONE
-  * scan; each round is dictionary-sized (pair fan-out + a
-  * vocab-bounded symbol-count join + a 1-row TakeOrdered pick).
-  * 100 TB of text never re-enters the loop.
+  * scan; the rounds run on the driver, which holds the |V|
+  * `(freq, sym)` rows (pair counts and symbol counts per round,
+  * [[TextAnalysis.trainMerges]]). 100 TB of text never re-enters the
+  * loop.
   */
 object CorpusOps59 {
 
@@ -36,48 +37,31 @@ object CorpusOps59 {
         Tables(s, dir, "documents").select(col("text"))), 6)
 
   /** The training loop behind [[qTokWordpieceTrain]] and
-    * `Graft.wordpieceTrain`: `k` rounds over a symbolized
-    * (word, freq, sym) dictionary. Emits (round, merge, cnt,
-    * left_cnt, right_cnt). */
+    * `Graft.wordpieceTrain`: `k` rounds of the shared
+    * [[TextAnalysis.trainMerges]] over a symbolized (freq, sym)
+    * dictionary, each picking the highest likelihood gain. Emits
+    * (round, merge, cnt, left_cnt, right_cnt). */
   private[graft] def wordpieceMerges(dict0: DataFrame,
       k: Int): DataFrame = {
     val s = dict0.sparkSession
-    val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var dict = graft.CacheScope.track(dict0
-      .select(col("freq"), col("sym")).persist(mad))
-    val merges =
-      scala.collection.mutable.Buffer.empty[(Long, String, Long, Long, Long)]
-    for (r <- 1 to k) {
-      val sc = dict
-        .select(col("freq"), explode(split(col("sym"), " ")).as("s"))
-        .groupBy(col("s")).agg(sum(col("freq")).as("scnt"))
-      val bests = TextAnalysis.pairCounts(dict)
-        .withColumn("l", expr("split(pair, ' ')[0]"))
-        .withColumn("r", expr("split(pair, ' ')[1]"))
-        .join(broadcast(sc.select(col("s").as("l"),
-          col("scnt").as("left_cnt"))), Seq("l"))
-        .join(broadcast(sc.select(col("s").as("r"),
-          col("scnt").as("right_cnt"))), Seq("r"))
-        // ONE double division of exact int64s ranks the likelihood
-        // gain (the cosine discipline); the pair string breaks ties
-        .orderBy((col("cnt").cast("double") /
-            (col("left_cnt") * col("right_cnt")).cast("double")).desc,
-          col("pair"))
-        .limit(1).collect()
-      require(bests.nonEmpty,
-        "wordpieceMerges: no symbol pairs to merge — empty or " +
-          "single-char dictionary (is the training corpus empty?)")
-      val b = bests(0)
-      merges += ((r.toLong, b.getAs[String]("pair"),
-        b.getAs[Long]("cnt"), b.getAs[Long]("left_cnt"),
-        b.getAs[Long]("right_cnt")))
-      dict = graft.CacheScope.track(dict
-        .withColumn("sym", TextAnalysis.anchoredMerge(col("sym"),
-          lit(b.getAs[String]("pair"))))
-        .persist(mad))
-    }
     import s.implicits._
-    merges.toSeq.toDF("round", "merge", "cnt", "left_cnt", "right_cnt")
+    TextAnalysis.trainMerges(dict0, k, "wordpieceMerges") { st =>
+      def lr(pair: String) = {
+        val a = pair.split(" ", -1)
+        (st.symbols(a(0)), st.symbols(a(1)))
+      }
+      // ONE double division of exact int64s ranks the likelihood gain
+      // (the cosine discipline); the pair string breaks ties
+      st.best { (pair, cnt) =>
+        val (l, r) = lr(pair)
+        cnt.toDouble / Math.multiplyExact(l, r).toDouble
+      }(TextAnalysis.sparkDoubleOrder).map { case (pair, cnt) =>
+        val (l, r) = lr(pair)
+        (pair, cnt, l, r)
+      }
+    }(_._1).zipWithIndex.map { case ((mg, cnt, l, r), i) =>
+      (i + 1L, mg, cnt, l, r)
+    }.toDF("round", "merge", "cnt", "left_cnt", "right_cnt")
       .orderBy(col("round"))
   }
 

@@ -687,9 +687,10 @@ object Dedup {
     * [[qDedupComponents]], factored out (r10) so other edge sets
     * (entity-resolution matches, similarity graphs) reuse the proven
     * loop discipline. Returns (v, l): vertex → min-reachable label.
-    * Every per-round driver action is a 1-row scalar sum; lineage is
-    * localCheckpoint-truncated per round with RDD-level block
-    * release. */
+    * `pairs` is planned once: the undirected edge set is its explode
+    * into both orientations, persisted. Every per-round driver action
+    * is a 1-row scalar sum; lineage is localCheckpoint-truncated per
+    * round with RDD-level block release. */
   private[graft] def componentsOf(
       pairs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // unsorted pairs: a presentation ORDER BY would tax the edge fill
@@ -697,8 +698,13 @@ object Dedup {
     // needs. repartition(da): every round's edges-side probe reuses
     // this one cached partitioning instead of re-exchanging the edge
     // set per iteration.
+    // Both orientations come from ONE reference to `pairs`: a union
+    // with its swap planned the whole pair pipeline (the jaccard join,
+    // for q_dedup_components) twice into round 1. Same edge multiset.
     val edges = pairs
-      .union(pairs.select(col("db").as("da"), col("da").as("db")))
+      .select(explode(array(struct(col("da"), col("db")),
+        struct(col("db").as("da"), col("da").as("db")))).as("e"))
+      .select(col("e.da").as("da"), col("e.db").as("db"))
       .repartition(col("da"))
       .persist()
     // Seed with round 1 directly: label(v) = min(v, min neighbor) in

@@ -1,7 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.Tables
 
 /** Text-analysis operators for a training-data pipeline (north star /
@@ -249,7 +251,9 @@ object TextAnalysis {
         ' ' || replace($mg, ' ', '') || ' '), '  ', ' '))"""
 
   /** Frequency-weighted adjacent-symbol pair counts over a `(freq,
-    * sym)` frame — the statistics both BPE queries share. */
+    * sym)` frame — the statistics both BPE queries share. A
+    * single-symbol word (`a</w>` after a merge, or the empty word's
+    * `</w>`) has no adjacent pair and contributes nothing. */
   private[graft] def pairCounts(df: org.apache.spark.sql.DataFrame) = df
     // bind the split ONCE per row in a projection below the Generate
     // (optimization r18, guide §4 per-task work): higher-order-function
@@ -259,6 +263,8 @@ object TextAnalysis {
     // trainer round. The Generate's child projection computes the
     // array once; values are identical.
     .select(col("freq"), split(col("sym"), " ").as("syms"))
+    // sequence(1, 0) is [1, 0], whose element_at(syms, 0) throws
+    .filter(size(col("syms")) > 1)
     .select(col("freq"), explode(expr(
       """transform(sequence(1, size(syms) - 1),
          i -> concat(element_at(syms, i), ' ',
@@ -304,43 +310,110 @@ object TextAnalysis {
     * 6 rounds of pick-best-pair → apply-merge over the weighted
     * word-frequency dictionary, emitting the learned merge table
     * (round, merge, cnt-at-pick) — the artifact a tokenizer ships.
-    * The per-round winner is a 1-row scalar driver action and the
-    * merge applies as a map-side literal rewrite (the rebalance
-    * discipline: state is referenced ONCE per round, so the plan
-    * lineage — and its per-execution description — stays linear in
-    * rounds; a broadcast-gated dataflow loop here would nest
-    * InMemoryRelations combinatorially, see q_sim_ivf_rebalance).
     *
     * Scale: the corpus collapses to the |V|-row dictionary in ONE
-    * scan; every round after that is dictionary-sized (pair fan-out
-    * |V|·len, map-side partial agg, TakeOrdered(1)). 100 TB of text
-    * never re-enters the loop. */
+    * scan; the rounds then run in [[trainMerges]] on the driver,
+    * which holds the |V| `(freq, sym)` rows. 100 TB of text never
+    * re-enters the loop. */
   val qBpeTrain: Q = (s, dir) => bpeMerges(symbolizedDict(s, dir), 6)
 
   /** The training loop behind [[qBpeTrain]] and `Graft.bpeTrain`:
-    * `k` rounds over a symbolized (freq, sym) dictionary. */
+    * `k` rounds over a symbolized (freq, sym) dictionary, each picking
+    * the highest-count pair. */
   private[graft] def bpeMerges(dict0: org.apache.spark.sql.DataFrame,
       k: Int): org.apache.spark.sql.DataFrame = {
     val s = dict0.sparkSession
-    var dict = graft.CacheScope.track(dict0
-      .select(col("freq"), col("sym"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val merges = scala.collection.mutable.Buffer.empty[(Long, String, Long)]
-    for (r <- 1 to k) {
-      val bests = pairCounts(dict)
-        .orderBy(col("cnt").desc, col("pair")).limit(1).collect()
-      require(bests.nonEmpty,
-        "bpeMerges: no symbol pairs to merge — empty or single-char " +
-          "dictionary (is the training corpus empty?)")
-      val best = bests(0)
-      val (mg, cnt) = (best.getString(0), best.getLong(1))
-      merges += ((r.toLong, mg, cnt))
-      dict = graft.CacheScope.track(dict
-        .withColumn("sym", anchoredMerge(col("sym"), lit(mg)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
     import s.implicits._
-    merges.toSeq.toDF("round", "merge", "cnt").orderBy(col("round"))
+    trainMerges(dict0, k, "bpeMerges")(_.best((_, cnt) => cnt))(_._1)
+      .zipWithIndex.map { case ((mg, cnt), i) => (i + 1L, mg, cnt) }
+      .toDF("round", "merge", "cnt").orderBy(col("round"))
+  }
+
+  /** The merge-training loop of BPE ([[bpeMerges]]) and WordPiece
+    * (`CorpusOps59.wordpieceMerges`), which differ only in `pick`.
+    * The `(freq, sym)` dictionary is collected ONCE — the driver holds
+    * its |V| rows, and `spark.driver.maxResultSize` fails loudly past
+    * that — and the `k` rounds run here with the semantics of the
+    * per-round Spark formulation ([[pairCounts]], an
+    * `orderBy(score.desc, col("pair")).limit(1)` pick, and
+    * [[anchoredMerge]] over every row): one Spark job in all, instead
+    * of a collect of several jobs plus a persisted dictionary copy per
+    * round. `pair` names the merge a picked row applies. A dictionary
+    * with no adjacent pair left fails the round loudly. */
+  private[graft] def trainMerges[R](dict0: org.apache.spark.sql.DataFrame,
+      k: Int, who: String)(pick: MergeStats => Option[R])(
+      pair: R => String): Seq[R] = {
+    // a null sym splits to null in Spark: no pairs, no symbols, and it
+    // stays null through every merge
+    val rows = dict0.select(col("freq"), col("sym"))
+      .filter(col("sym").isNotNull).collect()
+    val freqs = rows.map(_.getLong(0))
+    val syms = rows.map(_.getString(1))
+    (1 to k).map { _ =>
+      val picked = pick(new MergeStats(freqs, syms))
+      require(picked.nonEmpty, s"$who: no symbol pairs to merge — " +
+        "empty or single-char dictionary (is the training corpus empty?)")
+      val merge = anchoredMergeOf(pair(picked.get))
+      syms.indices.foreach(i => syms(i) = merge(syms(i)))
+      picked.get
+    }
+  }
+
+  /** One round's statistics over the current dictionary, as the Spark
+    * formulation computes them: `split(sym, " ")` (Java's split with
+    * limit -1, trailing empties kept), frequency-weighted sums that
+    * fail on int64 overflow like ANSI `sum`, and no pairs from a
+    * single-symbol word. */
+  private[graft] final class MergeStats(freqs: Array[Long],
+      syms: Array[String]) {
+    private def weighted(keys: Array[String] => Iterator[String]) = {
+      val m = scala.collection.mutable.HashMap.empty[String, Long]
+      syms.indices.foreach { w =>
+        keys(syms(w).split(" ", -1)).foreach(key =>
+          m(key) = Math.addExact(m.getOrElse(key, 0L), freqs(w)))
+      }
+      m
+    }
+    /** Adjacent-pair counts, keyed `"l r"` ([[pairCounts]]). */
+    val pairs: scala.collection.Map[String, Long] = weighted(a =>
+      Iterator.range(1, a.length).map(i => a(i - 1) + " " + a(i)))
+    /** Symbol counts (WordPiece's denominators), built on first use. */
+    lazy val symbols: scala.collection.Map[String, Long] =
+      weighted(_.iterator)
+
+    /** The pair with the greatest `key(pair, cnt)`, ties broken by the
+      * smaller pair in UTF-8 byte order — Spark's string order, which
+      * is not `String.compareTo`'s UTF-16 order once a supplementary
+      * character meets a U+E000–U+FFFF one. */
+    def best[K](key: (String, Long) => K)(implicit ord: Ordering[K])
+        : Option[(String, Long)] = {
+      val smallerFirst: Ordering[UTF8String] = (a, b) => b.compareTo(a)
+      pairs.maxByOption { case (p, c) => (key(p, c), UTF8String.fromString(p)) }(
+        Ordering.Tuple2(ord, smallerFirst))
+    }
+  }
+
+  /** Spark's double order (`SQLOrderingUtil.compareDoubles`: NaN
+    * greatest, -0.0 == 0.0), for [[MergeStats.best]] on a double key. */
+  private[graft] val sparkDoubleOrder: Ordering[Double] =
+    (a: Double, b: Double) => SQLOrderingUtil.compareDoubles(a, b)
+
+  /** [[anchoredMerge]] of the literal merge `mg` as a driver-side
+    * function with Spark's semantics: `String.replace` is Spark's
+    * left-to-right non-overlapping `replace` for these non-empty
+    * patterns, and Spark's `trim` strips only spaces (`String.trim`
+    * would also strip control characters). */
+  private[graft] def anchoredMergeOf(mg: String): String => String = {
+    val from = " " + mg.replace(" ", "  ") + " "
+    val to = " " + mg.replace(" ", "") + " "
+    sym => {
+      val s = (" " + sym.replace(" ", "  ") + " ").replace(from, to)
+        .replace("  ", " ")
+      var (b, e) = (0, s.length)
+      while (b < e && s.charAt(b) == ' ') b += 1
+      while (e > b && s.charAt(e - 1) == ' ') e -= 1
+      s.substring(b, e)
+    }
   }
 
   /** BPE tokenizer APPLICATION + fertility report — the consumer of
@@ -407,8 +480,8 @@ object TextAnalysis {
     * 2016 economy rendered as data).
     *
     * Scale: the q_bpe_train shape — the corpus collapses to the
-    * |V|-row dictionary in ONE scan, the 6-round loop is
-    * dictionary-sized with 1-row scalar picks, and each curve point
+    * |V|-row dictionary in ONE scan, the 6-round loop runs on the
+    * driver over its |V| collected rows, and each curve point
     * is a rollup of a map-side re-merge of that dictionary. Token
     * totals and symbol counts are exact integers. */
   val qBpeVocabCurve: Q = (s, dir) =>
