@@ -85,7 +85,7 @@ object Bench {
     "q_dedup_winnow",          // per-doc window-min fingerprints + pair join (r11)
     "q_dedup_lsh_sweep",       // 3-point banding sweep + lossless truth (r11)
     "q_sim_ivf_split",         // hottest-cell split: one-cell argmin re-assign (r12)
-    "q_eval_elo",              // ordered duel stream + packed-row Elo fold (r12)
+    "q_eval_elo",              // ordered duel stream + driver-side Elo fold (r12)
     "q_graph_ppr_topic",       // seed-set restart walk on the shared core (r12)
     "q_eval_pass_at_k",        // falling-factorial pass@k over source pools (r12)
     "q_text_distinct_n",       // distinct-1/2 lexical diversity per source (r12)

@@ -354,20 +354,21 @@ object Graft {
     * exact zero-sum integer deltas (loser delta := −winner delta);
     * everyone starts at 1500. Returns (`player`, `rating`).
     *
-    * Scale: the whole inherently-sequential loop runs as ONE
-    * packed-row `aggregate` higher-order expression — zero per-game
-    * Spark jobs. The games frame must be dimension-bounded (players²
-    * × rounds, not corpus-sized) — that is what makes Elo-on-Spark
-    * sane; aggregate per-(player-pair, period) FIRST, as the declared
-    * query does. */
+    * Ties in (`ordCol`, `iCol`, `jCol`) are processed in score
+    * order. A null player or score throws.
+    *
+    * Scale: one Spark action packs the whole stream into one sorted row,
+    * and the inherently sequential loop runs on the driver over it —
+    * zero per-game Spark jobs; the call is eager. The games frame
+    * must be dimension-bounded (players² × rounds, not corpus-sized)
+    * — that is what makes Elo-on-Spark sane; aggregate
+    * per-(player-pair, period) FIRST, as the declared query does. */
   def eloRatings(games: DataFrame, ordCol: String, iCol: String,
-      jCol: String, sPermilleCol: String): DataFrame = {
-    val g = games.select(col(ordCol).as("ord"), col(iCol).as("i"),
-      col(jCol).as("j"), col(sPermilleCol).cast("long").as("s_i"))
-    val players = g.select(col("i").as("player"))
-      .union(g.select(col("j").as("player"))).distinct()
-    graft.ops.CorpusOps43.eloFold(g, players)
-  }
+      jCol: String, sPermilleCol: String): DataFrame =
+    graft.ops.CorpusOps43.eloFold(games.select(col(ordCol).as("ord"),
+        col(iCol).as("i"), col(jCol).as("j"),
+        col(sPermilleCol).cast("long").as("s_i")))
+      .select(col("player"), col("rating"))
 
   /** Unbiased pass@k (Chen et al. 2021, the HumanEval estimator) over
     * a per-pool attempts frame: `nCol` = attempts, `cCol` = passes;

@@ -24,28 +24,23 @@ object CorpusOps10 {
     * plus the binary ground-truth label `is_en` (language-ID gate —
     * "does the quality score separate English from non-English text",
     * the fastText-quality-vs-langid audit every multilingual corpus
-    * runs). Bucket-level partial aggregation below the 256-row
-    * broadcast weight join — identical plan shape to the classifier
-    * itself. */
-  private[graft] def scored(s: SparkSession, dir: String): DataFrame = {
-    val weights = broadcast(s.range(0, 256).select(
-      col("id").as("bucket"),
-      (col("id") * lit(2654435761L) % 2003).as("weight")))
-    Tables(s, dir, "documents")
+    * runs). Row-local: the bucket-weighted count Σ_bucket c·w equals
+    * the per-word sum Σ_word w(bucket(word)), so one `aggregate` over
+    * the split text scores a doc without a shuffle or a weight join. */
+  private[graft] def scored(s: SparkSession, dir: String): DataFrame =
+    scoredOf(Tables(s, dir, "documents"))
+
+  /** [[scored]] over a (doc_id, lang, text) frame, one row per doc
+    * whose text is not null. */
+  private[graft] def scoredOf(docs: DataFrame): DataFrame =
+    docs.filter(col("text").isNotNull)
       .select(col("doc_id"), col("lang"), split(col("text"), " ").as("a"))
-      .select(col("doc_id"), col("lang"),
-        size(col("a")).cast("long").as("ntok"), explode(col("a")).as("w"))
-      .withColumn("bucket",
-        conv(substring(md5(col("w")), 1, 4), 16, 10).cast("long") % 256)
-      .groupBy(col("doc_id"), col("lang"), col("ntok"), col("bucket"))
-      .agg(count(lit(1)).as("c"))
-      .join(weights, Seq("bucket"))
-      .groupBy(col("doc_id"), col("lang"), col("ntok"))
-      .agg(sum(col("c") * col("weight")).as("raw"))
       .select(col("doc_id"),
-        expr("raw * 1000 div ntok").as("score_milli"),
+        expr("""aggregate(a, 0L, (raw, w) -> raw +
+            (CAST(conv(substring(md5(w), 1, 4), 16, 10) AS BIGINT) % 256)
+              * 2654435761 % 2003)
+          * 1000 div size(a)""").as("score_milli"),
         when(col("lang") === "en", 1L).otherwise(0L).as("pos"))
-  }
 
   /** Exact ROC-AUC via the score-level Mann-Whitney decomposition
     * (Hanley & McNeil 1982): collapse docs to (score, n_pos, n_neg)

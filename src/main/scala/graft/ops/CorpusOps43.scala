@@ -1,6 +1,8 @@
 package graft.ops
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.Tables
 
 /** Corpus + analytics operators, r12 wave 31 (SURVEY.md §2.M): ONLINE
@@ -35,7 +37,7 @@ object CorpusOps43 {
     * corpus twice (persisting the per-doc `scored` frame instead was
     * measured a wash in r14/r17 — the cube is the aggregate-first
     * version of that idea). */
-  private[ops] def scoreCells(s: org.apache.spark.sql.SparkSession,
+  private[graft] def scoreCells(s: org.apache.spark.sql.SparkSession,
       dir: String, scored: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
     scored
@@ -48,7 +50,7 @@ object CorpusOps43 {
   /** Per-(source, round) exact score sums off the [[scoreCells]] cube:
     * means compare by integer cross-multiplication (tot_a·n_b vs
     * tot_b·n_a), never a float. */
-  private def eloGames(cells: org.apache.spark.sql.DataFrame)
+  private[graft] def eloGames(cells: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val rounds = cells
       .groupBy(col("source"), col("round"))
@@ -74,85 +76,87 @@ object CorpusOps43 {
     * Scale: the corpus collapses to the (source, round) cell table —
     * |sources|·16 rows — in ONE partial-aggregated scan (the
     * classifier pass is the only per-doc work); the game stream is
-    * |sources|²·16-bounded, packs into ONE row, and the inherently
-    * sequential Elo fold runs as a single `aggregate` higher-order
-    * expression carrying the source→rating map — zero per-game or
-    * per-round Spark jobs (the q_eval_bradley_terry packed-row
-    * discipline; an unpacked formulation would schedule thousands of
-    * dependent jobs). */
-  /** The packed-row Elo fold shared by [[qEvalElo]] and the public
-    * API (`Graft.eloRatings`): `games` = (ord, i, j, s_i) — processed
-    * in (ord, i, j) order; `players` = 1-column (`player`) frame of
-    * participants (all start at 1500). Returns (player, rating). The
-    * entire inherently-sequential update loop is ONE `aggregate`
-    * higher-order expression over the packed game array, carrying the
-    * player→rating map — zero per-game jobs at any corpus size
-    * (bounded by the games frame, which the callers keep
-    * dimension-bounded). */
-  private[graft] def eloFold(games: org.apache.spark.sql.DataFrame,
-      players: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val delta =
-      s"""((32 * (g.s_i - element_at(
-            array(91, 151, 240, 360, 500, 640, 760, 849, 909),
-            CAST((greatest(-400, least(400,
-              element_at(st, g.i) - element_at(st, g.j))) + 400) div 100
-              AS INT) + 1)
-          + 1000)) div 1000 - 32)"""
-    games
-      .agg(sort_array(collect_list(struct(
-        col("ord"), col("i"), col("j"), col("s_i")))).as("gs"))
-      .crossJoin(broadcast(
-        players.agg(sort_array(collect_list(col("player"))).as("ss"))))
-      .withColumn("fin", expr(
-        s"""aggregate(gs,
-             map_from_arrays(ss, transform(ss, x -> CAST(1500 AS BIGINT))),
-             (st, g) -> map_from_arrays(map_keys(st),
-               transform(map_keys(st), k ->
-                 CASE WHEN k = g.i THEN element_at(st, k) + $delta
-                      WHEN k = g.j THEN element_at(st, k) - $delta
-                      ELSE element_at(st, k) END)))"""))
-      .select(explode(expr("map_entries(fin)")).as("e"))
-      .select(col("e.key").as("player"), col("e.value").as("rating"))
-  }
-
+    * |sources|²·16-bounded and folds on the driver ([[eloFold]]) —
+    * zero per-game or per-round Spark jobs (an unpacked formulation
+    * would schedule thousands of dependent jobs). */
   val qEvalElo: Q = (s, dir) =>
     eloBoard(s, dir, CorpusOps10.scored(s, dir))
+
+  /** The Elo fold shared by [[qEvalElo]] and the public API
+    * (`Graft.eloRatings`): `games` = (ord, i, j, s_i), processed in
+    * (ord, i, j, s_i) order; every player of the stream (i ∪ j) starts
+    * at 1500. Returns one row per player — (player, rating, games,
+    * wins, draws, losses), a side score of 1000/500/0 permille counting
+    * as a win/draw/loss — as a one-partition local frame, so sorting it
+    * needs no range exchange.
+    *
+    * The callers keep the stream dimension-bounded (players² × rounds
+    * rows), so ONE Spark action packs it into one row, ordered by
+    * `sort_array` exactly as an ORDER BY would order any `ord` type,
+    * and the inherently sequential loop runs on the driver over that
+    * row, in the exact int64 arithmetic of the object docstring (an
+    * overflow throws; `/` truncates as Spark's `div` does). A null
+    * player or score throws. */
+  private[graft] def eloFold(games: DataFrame): DataFrame = {
+    val gs = games.agg(sort_array(collect_list(struct(
+        col("ord"), col("i"), col("j"), col("s_i")))).as("gs"))
+      .collect()(0).getSeq[Row](0)
+    // rating, games, wins, draws, losses
+    val board = scala.collection.mutable.LinkedHashMap.empty[Any, Array[Long]]
+    def player(g: Row, k: Int): Array[Long] = {
+      require(!g.isNullAt(k), s"eloFold: null player in game $g")
+      board.getOrElseUpdate(g.get(k), Array(1500L, 0L, 0L, 0L, 0L))
+    }
+    def tally(p: Array[Long], sv: Long): Unit = {
+      p(1) += 1
+      sv match {
+        case 1000L => p(2) += 1
+        case 500L => p(3) += 1
+        case 0L => p(4) += 1
+        case _ =>
+      }
+    }
+    val expected = Array(91L, 151L, 240L, 360L, 500L, 640L, 760L, 849L, 909L)
+    for (g <- gs) {
+      val (pi, pj) = (player(g, 1), player(g, 2))
+      require(!g.isNullAt(3), s"eloFold: null score in game $g")
+      val si = g.getLong(3)
+      val d = math.max(-400L, math.min(400L, Math.subtractExact(pi(0), pj(0))))
+      val delta = Math.multiplyExact(32L, Math.addExact(
+        Math.subtractExact(si, expected(((d + 400) / 100).toInt)), 1000L)) /
+        1000 - 32
+      // both updates read the pre-game ratings; i == j moves i only
+      val rj = pj(0)
+      pi(0) = Math.addExact(pi(0), delta)
+      if (pj ne pi) pj(0) = Math.subtractExact(rj, delta)
+      tally(pi, si)
+      tally(pj, Math.subtractExact(1000L, si))
+    }
+    val schema = StructType(StructField("player", games.schema("i").dataType) +:
+      Seq("rating", "games", "wins", "draws", "losses")
+        .map(StructField(_, LongType, nullable = false)))
+    val rows = board.toSeq.map { case (p, t) => Row.fromSeq(p +: t.toSeq) }
+    games.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), schema).coalesce(1)
+  }
 
   /** Full Elo board from a caller-supplied scored frame — lets
     * [[qEvalRatingAgreement]] share ONE classifier scan between the
     * Elo and Bradley-Terry chains (the only per-doc work at scale;
     * r12 ran it twice). */
   private[ops] def eloBoard(s: org.apache.spark.sql.SparkSession,
-      dir: String, scored: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    eloBoardCells(s, dir, scoreCells(s, dir, scored))
+      dir: String, scored: DataFrame): DataFrame =
+    eloBoardCells(scoreCells(s, dir, scored))
 
   /** [[eloBoard]] from a pre-aggregated [[scoreCells]] cube — the
-    * agreement query passes its shared persisted cube here. */
-  private[ops] def eloBoardCells(s: org.apache.spark.sql.SparkSession,
-      dir: String, cells: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val games = graft.CacheScope.track(eloGames(cells).persist())
-    val srcs = Tables(s, dir, "documents")
-      .select(col("source").as("player")).distinct()
-    val ratings = eloFold(
-        games.select(col("round").as("ord"), col("i"), col("j"),
-          col("s_i")),
-        srcs)
-      .select(col("player").as("source"), col("rating"))
-    val tallies = games
-      .select(col("i").as("source"), col("s_i").as("sv"))
-      .unionByName(games.select(col("j").as("source"),
-        (lit(1000L) - col("s_i")).as("sv")))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("games"),
-        sum(when(col("sv") === 1000, 1L).otherwise(0L)).as("wins"),
-        sum(when(col("sv") === 500, 1L).otherwise(0L)).as("draws"),
-        sum(when(col("sv") === 0, 1L).otherwise(0L)).as("losses"))
-    ratings.join(tallies, Seq("source"))
+    * agreement query passes its shared persisted cube here. Sources
+    * that played no game (a source alone in every round) are not on
+    * the board. */
+  private[ops] def eloBoardCells(cells: DataFrame): DataFrame =
+    eloFold(eloGames(cells).select(col("round").as("ord"), col("i"),
+        col("j"), col("s_i")))
+      .withColumnRenamed("player", "source")
       .orderBy(col("rating").desc, col("source"))
-  }
 
   /** Rank agreement between the ONLINE Elo leaderboard and the BATCH
     * Bradley-Terry fit over the same tournament — Kendall τ-b in the
@@ -205,7 +209,7 @@ object CorpusOps43 {
     // actions.
     val cells = graft.CacheScope.track(
       scoreCells(s, dir, scored).persist())
-    val elo = eloBoardCells(s, dir, cells)
+    val elo = eloBoardCells(cells)
       .select(col("source"), col("rating"))
     val bt = CorpusOps39.btBoardCells(cells)
       .select(col("source"), col("strength_micro"))

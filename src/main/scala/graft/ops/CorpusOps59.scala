@@ -62,7 +62,7 @@ object CorpusOps59 {
     }(_._1).zipWithIndex.map { case ((mg, cnt, l, r), i) =>
       (i + 1L, mg, cnt, l, r)
     }.toDF("round", "merge", "cnt", "left_cnt", "right_cnt")
-      .orderBy(col("round"))
+      .coalesce(1).orderBy(col("round")) // as in bpeMerges
   }
 
   /** Per-source fertility under the FINAL WordPiece model — the

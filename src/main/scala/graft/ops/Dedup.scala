@@ -101,17 +101,17 @@ object Dedup {
   private[graft] def jaccardPairStreamOf(
       docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    // persist the hashed shingle stream: it feeds the hot-list agg, the
-    // per-doc sizes agg, and both self-join sides — without it the
-    // token-explode + concat_ws subtree (the CPU-heaviest part of the
-    // pipeline) is recomputed per consumer. MEMORY_AND_DISK: at corpus
-    // scale the (doc_id, h) pairs are ~16 bytes/shingle and spill
-    // gracefully instead of OOMing. CacheScope-tracked: the harness
-    // unpersists after materializing, so bench loops don't accumulate
-    // one pinned frame per invocation (ADVICE r7).
-    val raw = graft.CacheScope.track(
-      shingledDocs(docs).select(col("doc_id"), xxhash64(col("g")).as("h"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // The hashed shingle stream feeds the hot-list agg, the per-doc
+    // sizes agg and both self-join sides, and is NOT persisted: under
+    // AQE every reference to a not-yet-materialized cached frame
+    // becomes its own table-cache query stage (one single-task job
+    // each), and the cache scan hides the identical self-join sides
+    // from ReuseExchange. Unpersisted, the two sides plan as one
+    // exchange plus its ReusedExchange (PlanSpec pins this); the
+    // tokenize + hash subtree re-runs per aggregate instead. Callers
+    // that reuse the stream across actions persist it themselves.
+    val raw = shingledDocs(docs)
+      .select(col("doc_id"), xxhash64(col("g")).as("h"))
     // df-cut via ANTI-join against the HOT-shingle list: shingles with
     // df > cap are the Zipf head — in real corpora small enough that
     // Catalyst broadcasts the list and the cut costs ZERO shuffles of
@@ -122,11 +122,6 @@ object Dedup {
     // gracefully to a shuffled anti-join instead of OOMing the driver.
     val hot = raw.groupBy(col("h")).agg(count(lit(1)).as("df"))
       .filter(col("df") > ShingleDfCap).select(col("h"))
-    // NOT persisted: the anti-join re-runs per consumer over the CACHED
-    // raw stream (cheap map-side broadcast anti-join), and the two
-    // self-join sides already collapse into one computation via
-    // ReuseExchange — measured r6: persisting here is noise-neutral at
-    // sf0.1 while adding cache pressure at corpus scale
     val sh = raw.join(hot, Seq("h"), "left_anti")
     // attach each doc's shingle-set size BEFORE the pair join
     // (optimization r17): the r6 shape joined sizes into the PAIR
@@ -688,16 +683,22 @@ object Dedup {
     * (entity-resolution matches, similarity graphs) reuse the proven
     * loop discipline. Returns (v, l): vertex → min-reachable label.
     * `pairs` is planned once: the undirected edge set is its explode
-    * into both orientations, persisted. Every per-round driver action
-    * is a 1-row scalar sum; lineage is localCheckpoint-truncated per
-    * round with RDD-level block release. */
+    * into both orientations, eagerly locally checkpointed and released
+    * after the last round. Every per-round driver action is a 1-row
+    * scalar sum; lineage is localCheckpoint-truncated per round with
+    * RDD-level block release. */
   private[graft] def componentsOf(
       pairs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // unsorted pairs: a presentation ORDER BY would tax the edge fill
     // with a range exchange + global sort the iterative join never
     // needs. repartition(da): every round's edges-side probe reuses
-    // this one cached partitioning instead of re-exchanging the edge
-    // set per iteration.
+    // this one materialized partitioning instead of re-exchanging the
+    // edge set per iteration. An EAGER localCheckpoint, not persist:
+    // under AQE each round's reference to a persisted frame plans its
+    // own table-cache query stage, while a checkpoint is a plain RDD
+    // scan that keeps the hash partitioning — on 4 cores a warm
+    // q_dedup_components at sf0.01 took 1.1 s against 1.3 s, although
+    // the eager materialization starts one or two more jobs.
     // Both orientations come from ONE reference to `pairs`: a union
     // with its swap planned the whole pair pipeline (the jaccard join,
     // for q_dedup_components) twice into round 1. Same edge multiset.
@@ -706,7 +707,7 @@ object Dedup {
         struct(col("db").as("da"), col("da").as("db")))).as("e"))
       .select(col("e.da").as("da"), col("e.db").as("db"))
       .repartition(col("da"))
-      .persist()
+      .localCheckpoint()
     // Seed with round 1 directly: label(v) = min(v, min neighbor) in
     // the same single shuffle a bare verts-distinct would have cost —
     // the loop starts one round ahead (r8: one fewer checkpoint+sum
@@ -788,7 +789,9 @@ object Dedup {
       labels = next
       rounds += 1
     }
-    edges.unpersist()
+    // every round is materialized into its own checkpoint, so only the
+    // rounds read the edge blocks
+    graft.CacheScope.checkpointRdd(edges).foreach(_.unpersist(blocking = false))
     // diagnostic hook (optimization r18): round-count evidence for the
     // pointer-jump change without a bench-visible cost — stderr only,
     // and only when the probe property is set

@@ -319,14 +319,16 @@ object TextAnalysis {
 
   /** The training loop behind [[qBpeTrain]] and `Graft.bpeTrain`:
     * `k` rounds over a symbolized (freq, sym) dictionary, each picking
-    * the highest-count pair. */
+    * the highest-count pair. The k-row table is sorted in ONE
+    * partition: a local table scans one partition per row, and a sort
+    * across them plans a sampled range exchange (5 jobs for 6 rows). */
   private[graft] def bpeMerges(dict0: org.apache.spark.sql.DataFrame,
       k: Int): org.apache.spark.sql.DataFrame = {
     val s = dict0.sparkSession
     import s.implicits._
     trainMerges(dict0, k, "bpeMerges")(_.best((_, cnt) => cnt))(_._1)
       .zipWithIndex.map { case ((mg, cnt), i) => (i + 1L, mg, cnt) }
-      .toDF("round", "merge", "cnt").orderBy(col("round"))
+      .toDF("round", "merge", "cnt").coalesce(1).orderBy(col("round"))
   }
 
   /** The merge-training loop of BPE ([[bpeMerges]]) and WordPiece

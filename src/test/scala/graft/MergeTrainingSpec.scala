@@ -126,11 +126,12 @@ class MergeTrainingSpec extends AnyFunSuite {
 
   test("training starts the same number of Spark jobs for 1 and 6 rounds") {
     val dict = dictOf(Tables(spark, sf, "documents"))
-    // the trainers train eagerly and return a local table of k rows;
-    // sorting that table starts jobs that follow its row count (one
-    // partition per row), not the rounds, so only the call is counted
+    // the trainers train eagerly and return a local table of k rows
+    // sorted in one partition; the collect of that table is counted
+    // too, so a sort that plans a range exchange over one partition per
+    // row (5 jobs for 6 rows against 2 for 1 row) fails the guard
     def jobs(train: Int => DataFrame, k: Int) =
-      run(JobCounter(spark.sparkContext)(train(k)))
+      run(JobCounter(spark.sparkContext)(train(k).collect()))
     val bpe = (k: Int) => TextAnalysis.bpeMerges(dict, k)
     val wp = (k: Int) => CorpusOps59.wordpieceMerges(dict, k)
     assert(jobs(bpe, 1) > 0)

@@ -106,22 +106,44 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Window"), p)
   }
 
-  test("jaccard shingle subtree is computed once at scale (no broadcast)") {
-    // The static plan references the hashed-shingle stream from four
-    // consumers (hot list, sizes, both self-join sides); the explicit
-    // MEMORY_AND_DISK persist must collapse them onto ONE cached
-    // computation (InMemoryTableScan at every consumer) — with broadcast
-    // off, i.e. the 100 TB regime where nothing fits in a broadcast.
+  test("jaccard pair stream: no table-cache stage, one reused self-join exchange") {
+    // Under AQE every reference to a not-yet-materialized persisted
+    // frame plans its own table-cache query stage (a single-task job
+    // each), and the cache scan keeps ReuseExchange from seeing that the
+    // two shuffle-hash self-join sides are one exchange. The executed
+    // plan must hold no cache stage, and one self-join side must be the
+    // other's ReusedExchange — with broadcast on (where that is the only
+    // reuse) and off (the 100 TB regime, where the df-cut's shuffled
+    // anti-join reuses the shingle and hot-list exchanges as well).
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
+      AdaptiveSparkPlanHelper, ShuffleQueryStageExec, TableCacheQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    def exchangeOf(p: SparkPlan): SparkPlan = p match {
+      case i: InputAdapter => exchangeOf(i.child)
+      case r: AQEShuffleReadExec => exchangeOf(r.child)
+      case q: ShuffleQueryStageExec => exchangeOf(q.plan)
+      case other => other
+    }
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val df = SparkEntry.queries("q_dedup_jaccard")(spark, sf)
-      df.collect()
-      val executed = df.queryExecution.executedPlan.toString
-      // every consumer reads the cache (the Generate lines in the print
-      // are the cached relation's BUILD plan, displayed per scan site,
-      // not separate executions)
-      assert(executed.contains("InMemoryTableScan"), executed)
+      for (threshold <- Seq(saved, "-1")) {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        val df = SparkEntry.queries("q_dedup_jaccard")(spark, sf)
+        df.collect()
+        val executed = df.queryExecution.executedPlan
+        val caches = helper.collect(executed) { case c: TableCacheQueryStageExec => c }
+        val reused = helper.collect(executed) { case r: ReusedExchangeExec => r }
+        val joins = helper.collect(executed) { case j: ShuffledHashJoinExec => j }
+        val reusedSides = joins.flatMap(j => Seq(j.left, j.right))
+          .map(exchangeOf).count(_.isInstanceOf[ReusedExchangeExec])
+        assert(caches.isEmpty && joins.size == 1 && reusedSides == 1 &&
+          (threshold == "-1" || reused.size == 1),
+          s"broadcast threshold $threshold:\n$executed")
+        CacheScope.release()
+      }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
   }
 
