@@ -49,7 +49,7 @@ object StressBench {
     // its PPJoin truth pass + 3 df-capped band joins, winnow by the
     // df-capped fingerprint pair join (~linear: density is a constant
     // fraction of the gram stream), ivf_delta by the assignment scan,
-    // doremi should be scale-flat (packed |sources|-row HOF updates)
+    // doremi should be scale-flat (a |sources|-row driver fold)
     "q_dedup_lsh_sweep", "q_dedup_winnow", "q_sim_ivf_delta",
     "q_mix_doremi",
     // r12 additions: maxsim/hard-negatives/binary are broadcast-query
@@ -64,14 +64,13 @@ object StressBench {
     // packed state), coreset is the assignment scan + tiny windows
     "q_graph_katz", "q_join_nearest_custom", "q_pack_bestfit",
     "q_sample_coreset",
-    // r14 additions (r13 verdict item 2): the rating-agreement pair —
-    // BOTH scan-sharing paths, so the shareScan default is a measured
-    // 10× decision, not an asserted one — the remaining r12 batch
-    // (ppr_topic/autopick/pass@k/distinct_n/vocab/mattr, expected
-    // ~classifier-scan / gram-scan linear), and the three conf-gated
-    // graph scale paths (expect the same sublinear class as their
-    // broadcast twins — the point is measuring, not asserting)
-    "q_eval_rating_agreement", "q_eval_rating_agreement+share",
+    // r14 additions (r13 verdict item 2): the rating agreement, the
+    // remaining r12 batch (ppr_topic/autopick/pass@k/distinct_n/vocab/
+    // mattr, expected ~classifier-scan / gram-scan linear), and the
+    // three conf-gated graph scale paths (expect the same sublinear
+    // class as their broadcast twins — the point is measuring, not
+    // asserting)
+    "q_eval_rating_agreement",
     "q_graph_ppr_topic", "q_dedup_lsh_autopick", "q_eval_pass_at_k",
     "q_text_distinct_n", "q_vocab_overlap", "q_text_mattr",
     "q_graph_hits", "q_graph_hits+shuffle",
@@ -269,9 +268,6 @@ object StressBench {
       ("q_graph_triangles", "spark.graft.triangles.shuffleJoin=true"),
     "q_graph_clustering+shuffle" ->
       ("q_graph_clustering", "spark.graft.clustering.shuffleJoin=true"),
-    "q_eval_rating_agreement+share" ->
-      ("q_eval_rating_agreement",
-        "spark.graft.ratingAgreement.shareScan=true"),
     "q_sim_ivf_rebalance+shuffle" ->
       ("q_sim_ivf_rebalance", "spark.graft.ivf.broadcastMemberLimit=0"),
     "q_sim_margin_mine+cells64" ->

@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.Tables
 
 /** Corpus + analytics operators, r10 wave 27 (SURVEY.md §2.M):
@@ -25,13 +25,15 @@ object CorpusOps39 {
     * join — the corpus collapses to (source, score) counts, a
     * per-source running cumulative over the bounded score axis, and
     * one counts×cumulative join on the score key. */
-  private def winsMatrix(cells: DataFrame): DataFrame = {
+  private[graft] def winsMatrix(cells: DataFrame): DataFrame = {
     // (source, score_milli) counts as an exact rollup of the shared
     // (source, round, score_milli) cube (CorpusOps43.scoreCells) —
-    // sum of disjoint cell counts = the old per-doc count(*)
-    val g = graft.CacheScope.track(
-      cells.groupBy(col("source"), col("score_milli"))
-        .agg(sum(col("nc")).as("n")).persist())
+    // sum of disjoint cell counts = the old per-doc count(*). Not
+    // persisted: its four readers sit in the one plan the fold
+    // collects, where a persist only added jobs (13-14 per warm
+    // q_eval_bradley_terry at sf0.01 without it, 14-16 with it).
+    val g = cells.groupBy(col("source"), col("score_milli"))
+      .agg(sum(col("nc")).as("n"))
     val axis = g.select(col("score_milli")).distinct()
     val srcs = g.select(col("source")).distinct()
     val grid = axis.crossJoin(srcs)
@@ -60,73 +62,57 @@ object CorpusOps39 {
     * pipeline feeds from.
     *
     * Scale: after [[winsMatrix]] everything operates on the
-    * |sources|² pair matrix — constant-size; each MM step is two
-    * broadcast joins and one aggregate. */
+    * |sources|² pair matrix — constant-size, collected once and fitted
+    * on the driver ([[btFold]]). */
   val qEvalBradleyTerry: Q = (s, dir) =>
-    btBoard(s, dir, CorpusOps10.scored(s, dir))
+    btBoardCells(CorpusOps43.scoreCells(s, dir, CorpusOps10.scored(s, dir)))
 
-  /** Full BT leaderboard from a caller-supplied scored frame — lets
-    * `q_eval_rating_agreement` share ONE classifier scan across its
-    * Elo and BT chains (see CorpusOps43). */
-  private[ops] def btBoard(s: SparkSession, dir: String,
-      scored: DataFrame): DataFrame =
-    btBoardCells(CorpusOps43.scoreCells(s, dir, scored))
+  /** The BT board from a CorpusOps43.scoreCells cube — the agreement
+    * query passes its shared persisted cube here. */
+  private[ops] def btBoardCells(cells: DataFrame): DataFrame =
+    btFold(winsMatrix(cells))
 
-  /** [[btBoard]] from a pre-aggregated CorpusOps43.scoreCells cube —
-    * the agreement query passes its shared persisted cube here. */
-  private[ops] def btBoardCells(cells: DataFrame): DataFrame = {
-    val wins = graft.CacheScope.track(
-      winsMatrix(cells).persist())
-    val srcs = wins.select(col("i").as("source")).distinct()
-    val pairs0 = srcs.select(col("source").as("i"))
-      .crossJoin(srcs.select(col("source").as("j")))
-      .filter(col("i") =!= col("j"))
-    val full = pairs0
-      .join(wins, Seq("i", "j"), "left").na.fill(0L, Seq("wins"))
-      .join(wins.select(col("i").as("j"), col("j").as("i"),
-        col("wins").as("wins_ji")), Seq("i", "j"), "left")
-      .na.fill(0L, Seq("wins_ji"))
-      .withColumn("n_ij", col("wins") + col("wins_ji"))
-    // The MM loop's frame is |sources|²-bounded, so running it as
-    // Spark jobs buys nothing and costs a checkpoint round-trip per
-    // iteration (~6 s of pure job fan-out at ANY scale — r10's
-    // heaviest bench line). Instead the whole matrix packs into ONE
-    // row (array of per-source rows + a source→strength map) and the
-    // 3 iterations become higher-order-function column expressions —
-    // same exact integer arithmetic (term = n_ij·10¹² div (si+sj),
-    // floor division only), zero extra jobs, constant plan depth.
-    val packed = full.groupBy(col("i"))
-      .agg(sort_array(collect_list(struct(col("j"), col("n_ij")))).as("ns"),
-        sum(col("wins")).as("w"), sum(col("wins_ji")).as("losses"))
-    var one = packed
-      .agg(sort_array(collect_list(
-        struct(col("i"), col("ns"), col("w"), col("losses")))).as("m"))
-      .withColumn("st", expr(
-        "map_from_arrays(transform(m, r -> r.i), " +
-          "transform(m, r -> CAST(1000000 AS BIGINT)))"))
-    for (_ <- 1 to 3) {
-      one = one
-        .withColumn("st0", expr(
-          """transform(m, r -> coalesce(
-               CAST(r.w AS DECIMAL(38,0)) * 1000000000000 div nullif(
-                 aggregate(r.ns, CAST(0 AS BIGINT), (acc, x) ->
-                   acc + CAST(x.n_ij AS DECIMAL(38,0)) * 1000000000000
-                         div (element_at(st, r.i) + element_at(st, x.j))),
-                 0), 0))"""))
-        .withColumn("tot",
-          expr("aggregate(st0, CAST(0 AS BIGINT), (acc, x) -> acc + x)"))
-        .withColumn("st", expr(
-          """map_from_arrays(transform(m, r -> r.i),
-             transform(st0, x ->
-               x * (size(m) * CAST(1000000 AS BIGINT))
-                 div nullif(tot, 0)))"""))
-        .drop("st0", "tot")
+  /** The MM fit of [[qEvalBradleyTerry]] over a `wins` = (i, j, wins)
+    * matrix (one row per ordered pair i ≠ j, as [[winsMatrix]] emits
+    * it): the sources are the distinct `i`, an absent pair counts 0
+    * wins. The |sources|² matrix is collected once
+    * ([[LocalFold.packSorted]]) and the 3 steps run on the driver with
+    * the semantics of the Spark expression they replace: int64 `+`,
+    * `*`, `sum` and `div` overflow throws (`Math.*Exact`); the
+    * DECIMAL(38,0) `n·10¹² div (S_i + S_j)` terms divide exact
+    * `BigInt`s, truncate, throw on a zero divisor and narrow to int64
+    * by wrapping, as Spark's decimal `div` does; a zero step total
+    * nulls every strength (`nullif(tot, 0)`), and a null strength
+    * stays null. */
+  private[graft] def btFold(wins: DataFrame): DataFrame = {
+    val rows = LocalFold.packSorted(wins, "i", "j", "wins")
+    val src = rows.map(_.get(0)).distinct
+    val at = src.zipWithIndex.toMap
+    val k = src.size
+    val m = Array.ofDim[Long](k, k)
+    for (r <- rows; j <- at.get(r.get(1))) m(at(r.get(0)))(j) = r.getLong(2)
+    def sumOver(i: Int)(f: Int => Long) = (0 until k).filter(_ != i)
+      .foldLeft(0L)((acc, j) => Math.addExact(acc, f(j)))
+    val n = Array.tabulate(k, k)((i, j) => Math.addExact(m(i)(j), m(j)(i)))
+    val w = Array.tabulate(k)(i => sumOver(i)(m(i)(_)))
+    val losses = Array.tabulate(k)(i => sumOver(i)(m(_)(i)))
+    def decDiv(a: Long, b: Long) = (BigInt(a) * 1000000000000L / b).toLong
+    def div(a: Long, b: Long) = if (b == -1L) Math.negateExact(a) else a / b
+    var st = Option(Array.fill(k)(1000000L))
+    for (_ <- 1 to 3) st = st.flatMap { s =>
+      val st0 = Array.tabulate(k) { i =>
+        val denom = sumOver(i)(j => decDiv(n(i)(j), Math.addExact(s(i), s(j))))
+        if (denom == 0) 0L else decDiv(w(i), denom)
+      }
+      val tot = st0.foldLeft(0L)(Math.addExact)
+      val scale = Math.multiplyExact(k.toLong, 1000000L)
+      Option.when(tot != 0)(st0.map(x => div(Math.multiplyExact(x, scale), tot)))
     }
-    one.select(explode(col("m")).as("r"), col("st"))
-      .select(col("r.i").as("source"), col("r.w").as("wins"),
-        col("r.losses").as("losses"),
-        expr("element_at(st, r.i)").as("strength_micro"))
-      .orderBy(col("strength_micro").desc, col("source"))
+    val schema = StructType(StructField("source", wins.schema("i").dataType) +:
+      Seq("wins", "losses", "strength_micro").map(StructField(_, LongType)))
+    LocalFold.frame(wins.sparkSession, schema,
+      src.indices.map(i => Row(src(i), w(i), losses(i), st.fold[Any](null)(_(i)))),
+      col("strength_micro").desc, col("source"))
   }
 
   /** Kendall tau-b (Kendall 1938) between the per-source mean-quality
@@ -190,7 +176,7 @@ object CorpusOps39 {
                WHERE g.source <> cum.loser GROUP BY 1, 2),
       pairs AS (SELECT a.source AS i, b.source AS j FROM srcs a
                 CROSS JOIN srcs b WHERE a.source <> b.source),
-      full_m AS (SELECT pairs.i, pairs.j,
+      full_m AS MATERIALIZED (SELECT pairs.i, pairs.j,
                    coalesce(wf.wins, 0) AS wins,
                    coalesce(wr.wins, 0) AS wins_ji,
                    coalesce(wf.wins, 0) + coalesce(wr.wins, 0) AS n_ij
@@ -201,6 +187,10 @@ object CorpusOps39 {
                FROM full_m GROUP BY 1),
       nsrc AS (SELECT CAST(count(*) AS BIGINT) AS k FROM srcs)"""
 
+  /** One MM step of the oracle. It reads `prev` twice and `full_m`
+    * once, so `full_m` and each step are MATERIALIZED: inlined, DuckDB
+    * re-plans the scored pipeline for every reference down the chain
+    * and ran out of memory at sf0.001. */
   private[ops] def iterSql(prev: String, cur: String): String = s"""
       d_$cur AS (SELECT f.i,
           CAST(sum(CAST(f.n_ij AS HUGEINT) * 1000000000000
@@ -214,7 +204,7 @@ object CorpusOps39 {
             // nullif(d_$cur.denom, 0) AS BIGINT), 0) AS st0
         FROM d_$cur JOIN wtot ON wtot.i = d_$cur.i),
       t_$cur AS (SELECT CAST(sum(st0) AS BIGINT) AS tot FROM r_$cur),
-      $cur AS (SELECT source,
+      $cur AS MATERIALIZED (SELECT source,
           CAST(st0 * (nsrc.k * 1000000)
             // nullif(t_$cur.tot, 0) AS BIGINT) AS st
         FROM r_$cur CROSS JOIN t_$cur CROSS JOIN nsrc)"""

@@ -1,6 +1,8 @@
 package graft.ops
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 import graft.Tables
 
 /** Corpus + analytics operators, r11 wave 1 (SURVEY.md §2.M): the
@@ -28,50 +30,48 @@ object CorpusOps42 {
     * canonical-representative discipline), keeping both engines
     * bit-identical with floor division only.
     *
-    * Scale: one corpus scoring scan collapses to |sources| rows; the
-    * 3 update steps run as higher-order-function expressions over ONE
-    * packed row (the q_eval_bradley_terry pattern) — zero extra jobs,
-    * zero iteration checkpoints, constant plan depth. */
-  val qMixDoremi: Q = (s, dir) => {
-    val bySrc = CorpusOps10.scored(s, dir)
+    * Scale: one corpus scoring scan collapses to |sources| rows,
+    * which [[doremiFold]] collects once and steps on the driver. */
+  val qMixDoremi: Q = (s, dir) =>
+    doremiFold(CorpusOps10.scored(s, dir)
       .join(Tables(s, dir, "documents").select(col("doc_id"),
         col("source")), Seq("doc_id"))
       .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("score_milli")).as("ssum"))
-    var one = bySrc
-      .agg(sort_array(collect_list(
-        struct(col("source"), col("n_docs"), col("ssum")))).as("m"))
-      .withColumn("gmean", expr(
-        """aggregate(m, CAST(0 AS BIGINT), (a, r) -> a + r.ssum)
-           div aggregate(m, CAST(0 AS BIGINT), (a, r) -> a + r.n_docs)"""))
-      .withColumn("excess", expr(
-        """transform(m, r ->
-             greatest(gmean - r.ssum div r.n_docs, CAST(0 AS BIGINT)))"""))
-      .withColumn("w", expr(
-        "transform(m, r -> CAST(1000000 AS BIGINT))"))
-    for (_ <- 1 to 3) {
-      one = one
-        .withColumn("w0", expr(
-          """transform(sequence(0, size(m) - 1), i ->
-               element_at(w, i + 1)
-                 * (1000000 + 100 * element_at(excess, i + 1))
-                 div 1000000)"""))
-        .withColumn("tot",
-          expr("aggregate(w0, CAST(0 AS BIGINT), (a, x) -> a + x)"))
-        .withColumn("w", expr(
-          """transform(w0, x ->
-               x * (size(m) * CAST(1000000 AS BIGINT))
-                 div nullif(tot, 0))"""))
-        .drop("w0", "tot")
+      .agg(count(lit(1)).as("n_docs"), sum(col("score_milli")).as("ssum")))
+
+  /** The 3 reweighting steps of [[qMixDoremi]] over its `bySrc` =
+    * (source, n_docs, ssum) rows, in source order
+    * ([[LocalFold.packSorted]]), with the semantics of the Spark
+    * expression they replace: int64 `+`, `*` and `-` overflow throws
+    * (`Math.*Exact`), `div` truncates (every divisor is a positive
+    * count, 10⁶ or a non-negative step total, so `/` never meets
+    * `Long.MinValue div -1`), and a zero step total nulls every weight
+    * (`nullif(tot, 0)`). An empty input yields no rows: the corpus
+    * mean, 0 div 0 there, is computed only for a row that reads it. */
+  private[graft] def doremiFold(bySrc: DataFrame): DataFrame = {
+    val m = LocalFold.packSorted(bySrc, "source", "n_docs", "ssum")
+    val n = m.map(_.getLong(1))
+    val ssum = m.map(_.getLong(2))
+    def total(xs: Seq[Long]) = xs.foldLeft(0L)(Math.addExact)
+    lazy val gmean = total(ssum) / total(n)
+    val excess = m.indices.map(i =>
+      math.max(Math.subtractExact(gmean, ssum(i) / n(i)), 0L))
+    var w = Option(Seq.fill(m.size)(1000000L))
+    for (_ <- 1 to 3) w = w.flatMap { w =>
+      val w0 = w.indices.map(i => Math.multiplyExact(w(i), Math.addExact(
+        1000000L, Math.multiplyExact(100L, excess(i)))) / 1000000L)
+      val tot = total(w0)
+      val scale = Math.multiplyExact(m.size.toLong, 1000000L)
+      Option.when(tot != 0)(w0.map(x => Math.multiplyExact(x, scale) / tot))
     }
-    one.select(posexplode(col("m")).as(Seq("i", "r")),
-        col("excess"), col("w"), col("gmean"))
-      .select(col("r.source").as("source"), col("r.n_docs").as("n_docs"),
-        expr("r.ssum div r.n_docs").as("mean_score_milli"),
-        col("gmean").as("corpus_mean_milli"),
-        expr("element_at(excess, i + 1)").as("excess_milli"),
-        expr("element_at(w, i + 1)").as("weight_micro"))
-      .orderBy(col("weight_micro").desc, col("source"))
+    val schema = StructType(StructField("source", bySrc.schema("source").dataType) +:
+      StructType.fromDDL("n_docs BIGINT NOT NULL, mean_score_milli BIGINT, " +
+        "corpus_mean_milli BIGINT, excess_milli BIGINT NOT NULL, " +
+        "weight_micro BIGINT").fields)
+    LocalFold.frame(bySrc.sparkSession, schema, m.indices.map(i =>
+        Row(m(i).get(0), n(i), ssum(i) / n(i), gmean, excess(i),
+          w.fold[Any](null)(_(i)))),
+      col("weight_micro").desc, col("source"))
   }
 
   /** Split-conformal prediction threshold + held-out coverage audit

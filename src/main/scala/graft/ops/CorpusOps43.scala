@@ -80,27 +80,25 @@ object CorpusOps43 {
     * zero per-game or per-round Spark jobs (an unpacked formulation
     * would schedule thousands of dependent jobs). */
   val qEvalElo: Q = (s, dir) =>
-    eloBoard(s, dir, CorpusOps10.scored(s, dir))
+    eloBoardCells(scoreCells(s, dir, CorpusOps10.scored(s, dir)))
 
   /** The Elo fold shared by [[qEvalElo]] and the public API
     * (`Graft.eloRatings`): `games` = (ord, i, j, s_i), processed in
     * (ord, i, j, s_i) order; every player of the stream (i ∪ j) starts
     * at 1500. Returns one row per player — (player, rating, games,
     * wins, draws, losses), a side score of 1000/500/0 permille counting
-    * as a win/draw/loss — as a one-partition local frame, so sorting it
-    * needs no range exchange.
+    * as a win/draw/loss — as a [[LocalFold.frame]] in board order
+    * (rating DESC, player).
     *
     * The callers keep the stream dimension-bounded (players² × rounds
-    * rows), so ONE Spark action packs it into one row, ordered by
-    * `sort_array` exactly as an ORDER BY would order any `ord` type,
-    * and the inherently sequential loop runs on the driver over that
-    * row, in the exact int64 arithmetic of the object docstring (an
+    * rows), so ONE Spark action packs it ([[LocalFold.packSorted]],
+    * ordered as an ORDER BY would order any `ord` type), and the
+    * inherently sequential loop runs on the driver over those rows,
+    * in the exact int64 arithmetic of the object docstring (an
     * overflow throws; `/` truncates as Spark's `div` does). A null
     * player or score throws. */
   private[graft] def eloFold(games: DataFrame): DataFrame = {
-    val gs = games.agg(sort_array(collect_list(struct(
-        col("ord"), col("i"), col("j"), col("s_i")))).as("gs"))
-      .collect()(0).getSeq[Row](0)
+    val gs = LocalFold.packSorted(games, "ord", "i", "j", "s_i")
     // rating, games, wins, draws, losses
     val board = scala.collection.mutable.LinkedHashMap.empty[Any, Array[Long]]
     def player(g: Row, k: Int): Array[Long] = {
@@ -135,23 +133,14 @@ object CorpusOps43 {
     val schema = StructType(StructField("player", games.schema("i").dataType) +:
       Seq("rating", "games", "wins", "draws", "losses")
         .map(StructField(_, LongType, nullable = false)))
-    val rows = board.toSeq.map { case (p, t) => Row.fromSeq(p +: t.toSeq) }
-    games.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), schema).coalesce(1)
+    LocalFold.frame(games.sparkSession, schema,
+      board.toSeq.map { case (p, t) => Row.fromSeq(p +: t.toSeq) },
+      col("rating").desc, col("player"))
   }
 
-  /** Full Elo board from a caller-supplied scored frame — lets
-    * [[qEvalRatingAgreement]] share ONE classifier scan between the
-    * Elo and Bradley-Terry chains (the only per-doc work at scale;
-    * r12 ran it twice). */
-  private[ops] def eloBoard(s: org.apache.spark.sql.SparkSession,
-      dir: String, scored: DataFrame): DataFrame =
-    eloBoardCells(scoreCells(s, dir, scored))
-
-  /** [[eloBoard]] from a pre-aggregated [[scoreCells]] cube — the
-    * agreement query passes its shared persisted cube here. Sources
-    * that played no game (a source alone in every round) are not on
-    * the board. */
+  /** The Elo board from a [[scoreCells]] cube — the agreement query
+    * passes its shared persisted cube here. Sources that played no
+    * game (a source alone in every round) are not on the board. */
   private[ops] def eloBoardCells(cells: DataFrame): DataFrame =
     eloFold(eloGames(cells).select(col("round").as("ord"), col("i"),
         col("j"), col("s_i")))
@@ -166,49 +155,14 @@ object CorpusOps43 {
     * trusting its cheap online scores: high agreement means the
     * incremental Elo board tracks what a full refit would say.
     *
-    * Scale: both inputs are |sources|-row leaderboards; the pair scan
-    * is |sources|²-bounded column arithmetic. */
+    * Scale: ONE persisted (source, round, score_milli) cube
+    * ([[scoreCells]], optimization r18) feeds both boards, so the
+    * corpus-sized classifier scan runs once; each board collects its
+    * |sources|-bounded rollup of the cube into a driver fold, and the
+    * pair scan is |sources|²-bounded column arithmetic. */
   val qEvalRatingAgreement: Q = (s, dir) => {
-    val share = s.conf.getOption("spark.graft.ratingAgreement.shareScan")
-      .map(_ == "true")
-      .getOrElse(false)
-    ratingAgreementResult(s, dir, share)
-  }
-
-  /** Agreement frame; `shareScan` selects whether the classifier scan
-    * persists once and feeds both chains, or each chain plans its own
-    * scored subtree. MEASURED (StressBench r14, both paths, same
-    * batch): un-shared wins at 1× (2.18 s vs 3.13 s at sf0.1) AND at
-    * 10× data (2.35 s vs 2.67 s) — the two chains' identical scored
-    * subtrees already share work through exchange reuse inside the
-    * single action, so the persist only adds an InMemoryRelation
-    * materialization barrier (r13 shipped the share un-measured and
-    * regressed the query 1.4×; this is the r14 re-measurement the
-    * done-criteria required). Default = un-shared, the measured
-    * winner at both scales; the conf keeps the persisted path
-    * available for a caller running the chains as SEPARATE actions,
-    * where exchange reuse cannot apply and the share is the only way
-    * to avoid a second corpus scan. */
-  private[graft] def ratingAgreementResult(
-      s: org.apache.spark.sql.SparkSession, dir: String,
-      shareScan: Boolean): org.apache.spark.sql.DataFrame = {
-    // ONE shared classifier scan: the per-doc scored stage is the only
-    // work that grows with the corpus — persist it once and feed BOTH
-    // the online-Elo and batch-BT chains from the same InMemoryRelation
-    // (r12 scanned twice; the downstreams are dimension-bounded).
-    val scored =
-      if (shareScan)
-        graft.CacheScope.track(CorpusOps10.scored(s, dir).persist())
-      else CorpusOps10.scored(s, dir)
-    // ONE persisted (source, round, score_milli) cube feeds both
-    // chains (optimization r18): the corpus-sized classifier scan runs
-    // once, and the persist barrier is |sources|·16·|score values|
-    // rows — the aggregate-first form of the r14-measured-wash scored
-    // persist (see scoreCells). The shareScan conf keeps its documented
-    // per-doc-frame meaning for callers running the chains as separate
-    // actions.
     val cells = graft.CacheScope.track(
-      scoreCells(s, dir, scored).persist())
+      scoreCells(s, dir, CorpusOps10.scored(s, dir)).persist())
     val elo = eloBoardCells(cells)
       .select(col("source"), col("rating"))
     val bt = CorpusOps39.btBoardCells(cells)
@@ -306,7 +260,7 @@ object CorpusOps43 {
     // recursive step, re-running the whole classifier scan per Elo
     // game (measured: hangs without, 1.8 s with, identical result)
     "q_eval_rating_agreement" -> Seq("scored AS (", "grid AS (",
-      "cum AS (", "wins AS (", "full_m AS (", "rounds AS (", "g0 AS (",
+      "cum AS (", "wins AS (", "rounds AS (", "g0 AS (",
       "games AS (").foldLeft(s"""
       WITH RECURSIVE ${CorpusOps39.winsSql},
       s0 AS (SELECT source, CAST(1000000 AS BIGINT) AS st FROM srcs),

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 
@@ -40,12 +41,10 @@ object CorpusOps59 {
     * `Graft.wordpieceTrain`: `k` rounds of the shared
     * [[TextAnalysis.trainMerges]] over a symbolized (freq, sym)
     * dictionary, each picking the highest likelihood gain. Emits
-    * (round, merge, cnt, left_cnt, right_cnt). */
+    * (round, merge, cnt, left_cnt, right_cnt) as a [[LocalFold.frame]]. */
   private[graft] def wordpieceMerges(dict0: DataFrame,
       k: Int): DataFrame = {
-    val s = dict0.sparkSession
-    import s.implicits._
-    TextAnalysis.trainMerges(dict0, k, "wordpieceMerges") { st =>
+    val merges = TextAnalysis.trainMerges(dict0, k, "wordpieceMerges") { st =>
       def lr(pair: String) = {
         val a = pair.split(" ", -1)
         (st.symbols(a(0)), st.symbols(a(1)))
@@ -59,10 +58,13 @@ object CorpusOps59 {
         val (l, r) = lr(pair)
         (pair, cnt, l, r)
       }
-    }(_._1).zipWithIndex.map { case ((mg, cnt, l, r), i) =>
-      (i + 1L, mg, cnt, l, r)
-    }.toDF("round", "merge", "cnt", "left_cnt", "right_cnt")
-      .coalesce(1).orderBy(col("round")) // as in bpeMerges
+    }(_._1)
+    LocalFold.frame(dict0.sparkSession, StructType.fromDDL(
+        "round BIGINT NOT NULL, merge STRING, cnt BIGINT NOT NULL, " +
+          "left_cnt BIGINT NOT NULL, right_cnt BIGINT NOT NULL"),
+      merges.zipWithIndex.map { case ((mg, cnt, l, r), i) =>
+        Row(i + 1L, mg, cnt, l, r)
+      }, col("round"))
   }
 
   /** Per-source fertility under the FINAL WordPiece model — the

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 import graft.Tables
 
@@ -319,17 +320,14 @@ object TextAnalysis {
 
   /** The training loop behind [[qBpeTrain]] and `Graft.bpeTrain`:
     * `k` rounds over a symbolized (freq, sym) dictionary, each picking
-    * the highest-count pair. The k-row table is sorted in ONE
-    * partition: a local table scans one partition per row, and a sort
-    * across them plans a sampled range exchange (5 jobs for 6 rows). */
+    * the highest-count pair; the k-row table is a [[LocalFold.frame]]. */
   private[graft] def bpeMerges(dict0: org.apache.spark.sql.DataFrame,
-      k: Int): org.apache.spark.sql.DataFrame = {
-    val s = dict0.sparkSession
-    import s.implicits._
-    trainMerges(dict0, k, "bpeMerges")(_.best((_, cnt) => cnt))(_._1)
-      .zipWithIndex.map { case ((mg, cnt), i) => (i + 1L, mg, cnt) }
-      .toDF("round", "merge", "cnt").coalesce(1).orderBy(col("round"))
-  }
+      k: Int): org.apache.spark.sql.DataFrame =
+    LocalFold.frame(dict0.sparkSession,
+      StructType.fromDDL("round BIGINT NOT NULL, merge STRING, cnt BIGINT NOT NULL"),
+      trainMerges(dict0, k, "bpeMerges")(_.best((_, cnt) => cnt))(_._1)
+        .zipWithIndex.map { case ((mg, cnt), i) => Row(i + 1L, mg, cnt) },
+      col("round"))
 
   /** The merge-training loop of BPE ([[bpeMerges]]) and WordPiece
     * (`CorpusOps59.wordpieceMerges`), which differ only in `pick`.
