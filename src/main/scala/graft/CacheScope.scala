@@ -41,6 +41,12 @@ object CacheScope {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
     }
 
+  /** Memory plus disk bytes of `rdd`'s stored blocks, from the driver's
+    * storage info (no job; 0 while none is reported). */
+  def storedBytes(rdd: org.apache.spark.rdd.RDD[_]): Long =
+    rdd.sparkContext.getRDDStorageInfo.find(_.id == rdd.id)
+      .map(i => i.memSize + i.diskSize).getOrElse(0L)
+
   /** Unpersist (non-blocking) everything tracked since the last release. */
   def release(): Unit = synchronized {
     live.foreach(_.unpersist())

@@ -82,12 +82,13 @@ object Graft {
       k = k, child = child))
   }
 
-  /** Connected components by iterative min-label propagation with
-    * per-round localCheckpoint lineage cuts and a 1-row scalar
-    * convergence action — the q_dedup_components engine, generalized.
-    * Returns (`node`, `component`) where the component id is the
-    * smallest node id reachable. Fails loudly if the diameter exceeds
-    * the round cap. */
+  /** Connected components — the q_dedup_components engine,
+    * generalized. Returns (`node`, `component`) where the component id
+    * is the smallest node id reachable (Spark's order). An edge set at
+    * or below `spark.sql.autoBroadcastJoinThreshold` is solved by
+    * union-find on the driver; a larger one by min-label propagation
+    * with pointer jumping, one shuffle round per step, which fails
+    * loudly if the graph needs more than its 20-round cap. */
   def connectedComponents(edges: DataFrame, src: String, dst: String)
       : DataFrame =
     Dedup.componentsOf(edges.select(col(src).as("da"), col(dst).as("db")))

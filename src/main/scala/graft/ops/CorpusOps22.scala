@@ -29,24 +29,30 @@ object CorpusOps22 {
     *
     * Scale: the edge set is the blocked fuzzy join's output (never
     * all-pairs) narrowed by two broadcast attribute joins; the closure
-    * is [[Dedup.componentsOf]] (1-row scalar per-round actions,
-    * checkpoint-truncated lineage). */
+    * is [[Dedup.componentsOf]]: union-find on the driver while the edge
+    * set is broadcast-sized, pointer-jumping shuffle rounds above. */
   val qErClusters: Q = (s, dir) => {
+    val comp = Dedup.componentsOf(erPairs(s, dir))
+    val sizes = comp.groupBy(col("l")).agg(count(lit(1)).as("cluster_size"))
+    comp.join(broadcast(sizes), Seq("l"))
+      .select(col("v").as("c_custkey"), col("l").as("cluster_rep"),
+        col("cluster_size"))
+      .orderBy(col("c_custkey"))
+  }
+
+  /** The match edges of [[qErClusters]]: edit≤1 name matches whose
+    * nation and segment agree, as (da, db). */
+  private[graft] def erPairs(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
     val cust = Tables(s, dir, "customer")
       .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
-    val pairs = Joins.qJoinFuzzy(s, dir)
+    Joins.qJoinFuzzy(s, dir)
       .join(cust.select(col("c_custkey").as("ida"),
         col("c_nationkey").as("na"), col("c_mktsegment").as("ma")), "ida")
       .join(cust.select(col("c_custkey").as("idb"),
         col("c_nationkey").as("nb"), col("c_mktsegment").as("mb")), "idb")
       .filter(col("na") === col("nb") && col("ma") === col("mb"))
       .select(col("ida").as("da"), col("idb").as("db"))
-    val comp = Dedup.componentsOf(pairs)
-    val sizes = comp.groupBy(col("l")).agg(count(lit(1)).as("cluster_size"))
-    comp.join(broadcast(sizes), Seq("l"))
-      .select(col("v").as("c_custkey"), col("l").as("cluster_rep"),
-        col("cluster_size"))
-      .orderBy(col("c_custkey"))
   }
 
   /** Language-ID confusion matrix: the per-doc stopword-hit language

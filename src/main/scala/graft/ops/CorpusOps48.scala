@@ -380,8 +380,8 @@ object CorpusOps48 {
     *
     * Scale: the contracted graph is |delta edges|-sized — the whole
     * point of incremental maintenance; base CC runs on the base-only
-    * pair stream (one persisted stream feeds both slices); the
-    * iterative cores reuse componentsOf's checkpoint discipline. */
+    * pair stream (one persisted stream feeds both slices); both
+    * closures are [[Dedup.componentsOf]]. */
   val qDedupCcDelta: Q = (s, dir) =>
     ccDeltaFrom(Dedup.jaccardPairs(s, dir).select(col("da"), col("db")),
       _ % 10 === 0)
@@ -394,11 +394,11 @@ object CorpusOps48 {
       : DataFrame = {
     val pairs = graft.CacheScope.track(pairs0
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val baseCC = graft.CacheScope.track(
-      Dedup.componentsOf(
+    // componentsOf returns materialized labels (local rows or the
+    // loop's last checkpoint), so its three readers need no persist
+    val baseCC = Dedup.componentsOf(
         pairs.filter(!newP(col("da")) && !newP(col("db"))))
-        .withColumnRenamed("l", "lb")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .withColumnRenamed("l", "lb")
     val deltaPairs = pairs
       .filter(newP(col("da")) || newP(col("db")))
     // contract: base endpoints ride their base-cluster label (their

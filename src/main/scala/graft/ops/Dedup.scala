@@ -667,10 +667,10 @@ object Dedup {
   }
 
   /** Connected components over the near-dup pair graph (the clustering
-    * step of fuzzy dedup): iterative min-label propagation as a DataFrame
-    * loop — the 100 TB shape (each iteration is one shuffle join; rounds
-    * = graph diameter, small for dedup clusters). Oracle: DuckDB
-    * recursive-CTE reachability closure. */
+    * step of fuzzy dedup): min-label components via [[componentsOf]],
+    * which solves a broadcast-sized pair graph on the driver and
+    * iterates pointer-jumping shuffle rounds above that size (the
+    * 100 TB shape). Oracle: DuckDB recursive-CTE reachability closure. */
   val qDedupComponents: Q = (s, dir) => {
     componentsOf(jaccardPairs(s, dir).select(col("da"), col("db")))
       .select(col("v").as("doc_id"), col("l").as("component"))
@@ -678,15 +678,24 @@ object Dedup {
   }
 
   /** Min-label connected components over an undirected pair list
-    * (columns `da`, `db`) — the iterative core of
-    * [[qDedupComponents]], factored out (r10) so other edge sets
-    * (entity-resolution matches, similarity graphs) reuse the proven
-    * loop discipline. Returns (v, l): vertex → min-reachable label.
+    * (columns `da`, `db`) — the core of [[qDedupComponents]], shared by
+    * every other edge set (entity-resolution matches, similarity
+    * graphs, the cc-delta contraction). Returns (v, l): vertex →
+    * min-reachable label.
+    *
     * `pairs` is planned once: the undirected edge set is its explode
-    * into both orientations, eagerly locally checkpointed and released
-    * after the last round. Every per-round driver action is a 1-row
-    * scalar sum; lineage is localCheckpoint-truncated per round with
-    * RDD-level block release. */
+    * into both orientations, eagerly locally checkpointed. Its stored
+    * bytes (read from the driver's storage info, no job) then choose
+    * the path, as a broadcast join chooses its build side: at or below
+    * `spark.sql.autoBroadcastJoinThreshold` the edges are collected in
+    * one action and solved by union-find on the driver; above it (or
+    * for vertex types whose collected values do not compare as Spark
+    * compares them) the pointer-jumping loop runs one shuffle round per
+    * step, capped at 20 rounds. Both paths return the same rows under
+    * the same schema, nullability included. A null endpoint is a vertex
+    * that no join matches: it takes the smallest label of the
+    * components it touches (null if it touches none) and joins none of
+    * them. The edge blocks are released before returning. */
   private[graft] def componentsOf(
       pairs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // unsorted pairs: a presentation ORDER BY would tax the edge fill
@@ -696,9 +705,8 @@ object Dedup {
     // edge set per iteration. An EAGER localCheckpoint, not persist:
     // under AQE each round's reference to a persisted frame plans its
     // own table-cache query stage, while a checkpoint is a plain RDD
-    // scan that keeps the hash partitioning — on 4 cores a warm
-    // q_dedup_components at sf0.01 took 1.1 s against 1.3 s, although
-    // the eager materialization starts one or two more jobs.
+    // scan that keeps the hash partitioning; its blocks are also what
+    // the size gate measures.
     // Both orientations come from ONE reference to `pairs`: a union
     // with its swap planned the whole pair pipeline (the jaccard join,
     // for q_dedup_components) twice into round 1. Same edge multiset.
@@ -708,95 +716,136 @@ object Dedup {
       .select(col("e.da").as("da"), col("e.db").as("db"))
       .repartition(col("da"))
       .localCheckpoint()
+    val edgeRdd = graft.CacheScope.checkpointRdd(edges).get
     // Seed with round 1 directly: label(v) = min(v, min neighbor) in
-    // the same single shuffle a bare verts-distinct would have cost —
-    // the loop starts one round ahead (r8: one fewer checkpoint+sum
-    // round, measured ~10% off the query at sf0.1).
-    var labels = edges.groupBy(col("da"))
+    // the same single shuffle a bare verts-distinct would have cost.
+    val seed = edges.groupBy(col("da"))
       .agg(min(col("db")).as("mn"))
       .select(col("da").as("v"), least(col("da"), col("mn")).as("l"))
-    // Convergence check: min-label propagation only ever DECREASES a
-    // label, so the label sum strictly decreases iff any label changed
-    // — one scan-and-sum of the cached frame per round instead of the
-    // next-vs-previous join the r7 loop paid. The sentinel skips the
-    // round-0 sum (an extra action that re-derived verts from the edge
-    // set): round 1 always changes labels on a non-empty graph, and an
-    // empty graph just runs one extra trivial round. sum(l) over
-    // cached bigint labels cannot overflow before doc_id counts do.
-    def labelSum(df: org.apache.spark.sql.DataFrame): Long =
-      df.agg(coalesce(sum(col("l")), lit(0L))).collect()(0).getLong(0)
-    var prevSum = Long.MinValue
+    val spark = pairs.sparkSession
+    try {
+      if (driverKeyed(edges.schema("da").dataType) &&
+          graft.CacheScope.storedBytes(edgeRdd) <=
+            spark.sessionState.conf.autoBroadcastJoinThreshold)
+        LocalFold.frame(spark,
+          ccRound(edges, seed, jump = false).select(col("v"), col("l")).schema,
+          unionFind(LocalFold.packSorted(edges, "da", "db")), col("v"))
+      else pointerJumping(edges, seed)
+    } finally edgeRdd.unpersist(blocking = false)
+  }
+
+  /** Vertex types whose collected values are equal exactly when Spark
+    * groups them together (no float normalization, no byte-array
+    * identity, no collation). */
+  private def driverKeyed(t: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    t match {
+      case ByteType | ShortType | IntegerType | LongType | BooleanType |
+          DateType | TimestampType | TimestampNTZType | StringType |
+          _: DecimalType => true
+      case _ => false
+    }
+  }
+
+  /** Min-label components of a symmetric edge list in Spark's
+    * `ORDER BY da, db` order. Every endpoint is some edge's `da`, so
+    * first-seen order is Spark's vertex order; union-find with path
+    * compression lets the smaller root win, so each root is its
+    * component's minimum vertex. A null endpoint mirrors the loop: its
+    * row carries the smallest root among its non-null neighbors. */
+  private def unionFind(edges: Seq[org.apache.spark.sql.Row])
+      : Seq[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.Row
+    val index = scala.collection.mutable.HashMap.empty[Any, Int]
+    val vertex = scala.collection.mutable.ArrayBuffer.empty[Any]
+    edges.foreach { e =>
+      if (!e.isNullAt(0) && !index.contains(e.get(0))) {
+        index(e.get(0)) = vertex.size
+        vertex += e.get(0)
+      }
+    }
+    val parent = Array.range(0, vertex.size)
+    def find(i: Int): Int = {
+      var root = i
+      while (parent(root) != root) root = parent(root)
+      var j = i
+      while (parent(j) != root) { val up = parent(j); parent(j) = root; j = up }
+      root
+    }
+    edges.foreach { e =>
+      if (!e.isNullAt(0) && !e.isNullAt(1)) {
+        val (a, b) = (find(index(e.get(0))), find(index(e.get(1))))
+        if (a != b) parent(math.max(a, b)) = math.min(a, b)
+      }
+    }
+    val nullEdges = edges.filter(_.isNullAt(0))
+    val nullRow = if (nullEdges.isEmpty) Nil else Seq(Row(null,
+      nullEdges.filterNot(_.isNullAt(1)).map(e => find(index(e.get(1))))
+        .minOption.map(vertex).orNull))
+    nullRow ++ vertex.indices.map(i => Row(vertex(i), vertex(find(i))))
+  }
+
+  /** One min-label round over (v, l) labels: each vertex takes the
+    * smallest of its own label, its neighbors' labels and, with
+    * `jump`, the label of its label; `moved` marks a label that fell. */
+  private def ccRound(edges: org.apache.spark.sql.DataFrame,
+      labels: org.apache.spark.sql.DataFrame, jump: Boolean)
+      : org.apache.spark.sql.DataFrame = {
+    val own = labels.select(col("v"), col("l"), lit(true).as("own"))
+    val viaEdge = edges
+      .join(labels.withColumnRenamed("v", "da"), "da")
+      .select(col("db").as("v"), col("l"), lit(false).as("own"))
+    // Pointer jumping (optimization r18, guide §1.2: rounds are the
+    // serial resource): l(l(v)) via a self-join of the label frame.
+    // l(v) is always the id of a vertex in v's component, so the jump
+    // stays inside the component; labels only ever DECREASE, so the
+    // fixed point is the component min. Distance-to-min roughly halves
+    // per round on top of the one-hop extension, so rounds drop from
+    // ~diameter to ~log2(diameter).
+    val candidates =
+      if (!jump) own.union(viaEdge)
+      else own.union(viaEdge).union(
+        labels.select(col("l").as("lk"), col("v"))
+          .join(labels.select(col("v").as("lk"), col("l")), "lk")
+          .select(col("v"), col("l"), lit(false).as("own")))
+    candidates.groupBy(col("v"))
+      .agg(min(col("l")).as("l"), min(when(col("own"), col("l"))).as("was"))
+      .select(col("v"), col("l"), (col("l") < col("was")).as("moved"))
+  }
+
+  /** The shuffle path of [[componentsOf]]: pointer-jumping rounds from
+    * `seed` until no label moves. Each round is one lazily
+    * localCheckpointed frame materialized by its own convergence count,
+    * so a round's plan is a constant-depth read of the previous
+    * round's blocks. */
+  private def pointerJumping(edges: org.apache.spark.sql.DataFrame,
+      seed: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    var labels = seed
     var changed = true
     var rounds = 0
     val maxRounds = 20
     // checkpoint blocks live at the RDD level, invisible to
     // Dataset.unpersist — free each superseded round's RDD directly
-    // (r8 review: the former labels.unpersist() here freed nothing)
     var prevCkpt: Option[org.apache.spark.rdd.RDD[_]] = None
     while (changed && rounds < maxRounds) {
-      val viaEdge = edges
-        .join(labels.withColumnRenamed("v", "da"), "da")
-        .select(col("db").as("v"), col("l"))
-      // Pointer jumping (optimization r18, guide §1.2: rounds are the
-      // serial resource): besides the one-hop neighbor min, each round
-      // also adopts the label OF its label — l(l(v)) — via a self-join
-      // of the cached label frame. l(v) is always the id of a vertex in
-      // v's component (seed and every merge only move ids within the
-      // component), so the jump stays inside the component; labels only
-      // ever DECREASE, so the fixed point is unchanged: when a full
-      // round moves nothing, the neighbor-min step alone is stable,
-      // which forces l constant per component = the component min —
-      // exactly the old loop's limit. Distance-to-min now roughly
-      // halves per round on top of the one-hop extension, so rounds
-      // drop from ~diameter to ~log2(diameter). The jump joins two
-      // CACHED sides (skipped in round 1, where `labels` is the
-      // unpersisted seed aggregation — re-running its subtree twice
-      // would cost more than one round saves).
-      val oneHop = labels.select(col("v"), col("l")).union(viaEdge)
-      val withJump =
-        if (rounds == 0) oneHop
-        else oneHop.union(labels.select(col("l").as("lk"), col("v"))
-          .join(labels.select(col("v").as("lk"), col("l")), "lk")
-          .select(col("v"), col("l")))
-      val merged = withJump
-        .groupBy(col("v")).agg(min(col("l")).as("l"))
-      // Truncate lineage EVERY round (r8; was every 5): persist caches
-      // DATA but the logical plan still nests, so each round re-analyzed
-      // a plan embedding the whole jaccard pipeline plus every prior
-      // iteration — at tiny per-round data volumes that recompilation
-      // WAS the round cost. localCheckpoint materializes AND caches,
-      // making round r's plan a constant-depth read of round r-1's RDD.
-      // LAZY checkpoint (optimization r17): the eager form ran one
-      // materialization job AND a separate convergence-sum job per
-      // round; lazily checkpointing lets the labelSum action below
-      // materialize the round's blocks in the SAME job — one job per
-      // round instead of two, same blocks, same lineage cut.
-      // INVARIANT (ADVICE r17): the convergence sum below MUST act on
-      // `next` (a full-partition action) BEFORE prevCkpt.unpersist
+      // The jump joins two CACHED sides, so it is skipped in round 1,
+      // where `labels` is the unpersisted seed aggregation.
+      // INVARIANT (ADVICE r17): the convergence count below MUST act
+      // on `next` (a full-partition action) BEFORE prevCkpt.unpersist
       // frees round r-1's blocks — a lazy checkpoint only truncates
-      // lineage once materialized, so reordering the unpersist above
-      // the action (or dropping the per-round action) would free the
-      // blocks round r still needs and make it unrecoverable.
-      val next = merged.localCheckpoint(false)
-      val nextSum = labelSum(next)
-      changed = nextSum != prevSum
-      prevSum = nextSum
-      // round r is materialized, so round r-1's blocks are dead (a lost
-      // block of r would be unrecoverable either way — the documented
-      // localCheckpoint trade)
+      // lineage once materialized, and the count materializes it in
+      // the same action (no separate materialization job).
+      val next = ccRound(edges, labels, jump = rounds > 0)
+        .localCheckpoint(false)
+      // labels only fall, so a round moved nothing iff none fell; a
+      // count of falls works for every orderable vertex type (a label
+      // sum would need numeric ids)
+      changed = next.filter(col("moved")).count() > 0
       prevCkpt.foreach(_.unpersist(blocking = false))
       prevCkpt = graft.CacheScope.checkpointRdd(next)
-      labels = next
+      labels = next.select(col("v"), col("l"))
       rounds += 1
     }
-    // every round is materialized into its own checkpoint, so only the
-    // rounds read the edge blocks
-    graft.CacheScope.checkpointRdd(edges).foreach(_.unpersist(blocking = false))
-    // diagnostic hook (optimization r18): round-count evidence for the
-    // pointer-jump change without a bench-visible cost — stderr only,
-    // and only when the probe property is set
-    if (sys.props.contains("graft.ccRounds"))
-      System.err.println(s"[cc] converged in $rounds rounds")
     // the final round's checkpoint blocks stay live for the consumer;
     // tracked at the RDD level so the harness release actually frees
     // them after materialization (ADVICE r7, corrected r8)
@@ -805,7 +854,7 @@ object Dedup {
     // component of diameter > maxRounds — fail loudly instead (ADVICE r02).
     if (changed) throw new IllegalStateException(
       s"connected components did not converge within $maxRounds rounds " +
-        "(label sum still decreasing) — raise the round cap")
+        "(a label still fell) — raise the round cap")
     labels
   }
 

@@ -14,12 +14,13 @@ private[graft] object LocalFold {
 
   /** The rows of `df` projected to `cols`, in the order an
     * `ORDER BY cols` gives (Spark's order for every type, e.g. UTF-8
-    * byte order for strings): one action that packs them into one row
-    * with `sort_array(collect_list(struct(cols)))`. The driver holds
-    * every row; `spark.driver.maxResultSize` fails loudly past that. */
+    * byte order for strings): one action that sorts them inside ONE
+    * partition, so no exchange (an extra job under AQE) sits between
+    * `df` and the driver. The driver holds every row;
+    * `spark.driver.maxResultSize` fails loudly past that. */
   def packSorted(df: DataFrame, cols: String*): Seq[Row] =
-    df.agg(sort_array(collect_list(struct(cols.map(col): _*))))
-      .collect()(0).getSeq[Row](0)
+    df.select(cols.map(col): _*).coalesce(1)
+      .sortWithinPartitions(cols.map(col): _*).collect().toSeq
 
   /** `rows` as a one-partition local frame sorted by `order`: a local
     * table scans one partition per row, and a sort across them plans a
