@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.types.{DecimalType, LongType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.catalyst.expressions.{MakeDecimal, Multiply, UnscaledValue}
+import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
+import graft.functions.DecimalKernels
 
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.{BasicFileAttributes, FileTime}
@@ -113,20 +116,30 @@ object Tables {
   // ---- hash-stability helpers (SURVEY.md §5.4) -----------------------------
   // Money columns in the fixtures are doubles; raw sum(double) is
   // partition-order dependent, so aggregate in exact decimal and only cast
-  // to double at the very end.
+  // to double at the very end. Every helper runs on the fixed-point kernels
+  // of `graft.functions.DecimalKernels`, which keep unscaled values in
+  // primitive longs inside whole-stage codegen and give Spark's own values,
+  // types, nullability and errors; each kernel's fallback is the Spark
+  // expression it replaces.
 
-  /** Exact-decimal view of a double column for order-independent sums. */
-  def dec(c: Column): Column = c.cast(DecimalType(18, 4))
+  /** Exact-decimal view of a double column for order-independent sums.
+    * `DecimalKernels.cast`: a double rounds half-up in long arithmetic
+    * wherever that is provably Spark's answer, and NaN, infinities,
+    * overflow and near-ties run Spark's `Cast`; other types are a `Cast`. */
+  def dec(c: Column): Column = DecimalKernels.cast(c, 18, 4)
 
   /** Narrower decimal for products: Spark's multiply rule is
     * (p1,s1)*(p2,s2) -> (p1+p2+1, s1+s2), so (10,4)-width operands keep a
     * two-term product chain (price * (1-disc) * (1+tax)) inside the 38-digit
     * cap with no precision loss: (10,4)*(11,4)->(22,8); (22,8)*(11,4)->(34,12).
+    * Same kernel as [[dec]].
     */
-  def dec10(c: Column): Column = c.cast(DecimalType(10, 4))
+  def dec10(c: Column): Column = DecimalKernels.cast(c, 10, 4)
 
-  /** sum(x) as exact decimal, emitted as double — same bits both engines. */
-  def dsum(c: Column): Column = sum(dec(c)).cast("double")
+  /** sum(x) as exact decimal, emitted as double — same bits both engines.
+    * `DecimalKernels.sum` over [[dec]]: a 128-bit accumulator in two long
+    * buffer slots, with Spark's result type and overflow error or null. */
+  def dsum(c: Column): Column = DecimalKernels.sum(dec(c)).cast("double")
 
   /** Sum a column that is ALREADY decimal (e.g. discPrice output) without
     * re-casting (re-casting would round each row — ADVICE.md r01).
@@ -135,12 +148,14 @@ object Tables {
     * rounded by DuckDB's int128/10^s double conversion, producing
     * adjacent-double mismatches (caught by the r02 sf0.001 probe). At
     * scale 4 the numerator is exact in double and one IEEE division is
-    * correctly rounded on both engines. */
-  def dsumExact(c: Column): Column = round(sum(c), 4).cast("double")
+    * correctly rounded on both engines. Same sum kernel as [[dsum]]; a
+    * decimal wider than 28 digits, or a non-decimal, gets Spark's `sum`. */
+  def dsumExact(c: Column): Column = round(DecimalKernels.sum(c), 4).cast("double")
 
   /** Deterministic average mirroring SQL AVG null semantics: exact-decimal
-    * sum divided by count(col) (nulls excluded — ADVICE.md r01), in double. */
-  def davg(c: Column): Column = sum(dec(c)).cast("double") / count(c)
+    * sum divided by count(col) (nulls excluded — ADVICE.md r01), in double.
+    * Same kernels as [[dsum]]. */
+  def davg(c: Column): Column = DecimalKernels.sum(dec(c)).cast("double") / count(c)
 
   /** Exact extended price net of discount: price * (1 - discount).
     * The (1-d) factor is computed in double and cast to DECIMAL(5,4) —
@@ -148,14 +163,22 @@ object Tables {
     * Spark's sum (which adds +10 precision) stays within the 38-digit cap
     * with NO precision loss. A wider operand chain silently truncates the
     * sum's scale via allowPrecisionLoss (caught by the r02 sf0.001 probe).
-    * Sum with [[dsumExact]]. */
-  def discPrice(price: Column, discount: Column): Column =
-    dec10(price) * (lit(1.0) - discount).cast(DecimalType(5, 4))
+    * Both casts are [[dec]]'s kernel; the product is Spark's own
+    * `MakeDecimal(UnscaledValue(a) * UnscaledValue(b), 16, 8)`, exact in a
+    * long since it stays below 10^15. Sum with [[dsumExact]]. */
+  def discPrice(price: Column, discount: Column): Column = {
+    val (a, b) = (PlanBridge.expression(dec10(price)),
+      PlanBridge.expression(DecimalKernels.cast(lit(1.0) - discount, 5, 4)))
+    PlanBridge.column(MakeDecimal(Multiply(UnscaledValue(a), UnscaledValue(b)), 16, 8))
+  }
 
   /** TPC-H Q1 "charge": price * (1-disc) * (1+tax), exact Decimal(22,12);
-    * sum precision 32 <= 38, so the sum is exact. Sum with [[dsumExact]]. */
+    * sum precision 32 <= 38, so the sum is exact. The (22,12) product is
+    * `DecimalKernels.multiply` (a long product; BigInteger only past
+    * 2^63), over [[discPrice]] and [[dec]]'s kernel. Sum with [[dsumExact]]. */
   def charge(price: Column, discount: Column, tax: Column): Column =
-    discPrice(price, discount) * (lit(1.0) + tax).cast(DecimalType(5, 4))
+    DecimalKernels.multiply(discPrice(price, discount),
+      DecimalKernels.cast(lit(1.0) + tax, 5, 4))
 
   /** Timestamp literal parsed in the (UTC-pinned) session time zone; matches
     * a naive DuckDB TIMESTAMP literal of the same wall-clock text. */

@@ -80,7 +80,7 @@ object AcidDml {
     s.read.parquet(table)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("cnt"),
-        sum(col("o_totalprice")).cast("double").as("sum_price"))
+        dsumExact(col("o_totalprice")).as("sum_price"))
       .orderBy(col("o_orderstatus"))
   }
 
@@ -102,7 +102,7 @@ object AcidDml {
     s.read.parquet(table)
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("cnt"),
-        sum(col("o_totalprice")).cast("double").as("sum_price"))
+        dsumExact(col("o_totalprice")).as("sum_price"))
       .orderBy(col("o_orderpriority"))
   }
 
@@ -127,7 +127,7 @@ object AcidDml {
     s.read.parquet(table)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("cnt"),
-        sum(col("o_totalprice")).cast("double").as("sum_price"))
+        dsumExact(col("o_totalprice")).as("sum_price"))
       .orderBy(col("o_orderstatus"))
   }
 
@@ -165,7 +165,7 @@ object AcidDml {
           col("o_orderstatus")))
     def snap(tag: String, df: DataFrame) = df.agg(
       count(lit(1)).as("cnt"),
-      sum(col("o_totalprice")).cast("double").as("sum_price"))
+      dsumExact(col("o_totalprice")).as("sum_price"))
       .select(lit(tag).as("version"), col("cnt"), col("sum_price"))
     snap("v0", readV0).union(snap("v1", readV1)).orderBy(col("version"))
   }

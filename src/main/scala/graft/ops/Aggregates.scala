@@ -17,7 +17,11 @@ import graft.Tables._
   * (group, partition), not per input row.
   *
   * Hash-stability: money doubles are summed as exact DECIMAL and emitted as
-  * double (SURVEY.md §5.4); every query ends in a total ORDER BY.
+  * double (SURVEY.md §5.4); every query ends in a total ORDER BY. The
+  * `Tables` helpers doing this run on `graft.functions.DecimalKernels`, so
+  * q1's cast, multiply and sum keep their unscaled values in longs and its
+  * partial aggregate stays one whole-stage-codegen `HashAggregateExec`
+  * (PlanSpec pins both).
   */
 object Aggregates {
 

@@ -13,6 +13,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Proj
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
+import graft.functions.{DoubleToDecimal, ExactCast}
+
 /** Automatic materialized-view rewrite — the optimizer-side analogue of
   * Hive 3's flagship MV feature [hive: ql/src/java/org/apache/hadoop/hive/
   * ql/metadata/HiveMaterializedViewsRegistry.java + Calcite's
@@ -156,7 +158,9 @@ object MaterializedViewRewrite extends Rule[LogicalPlan] {
     * so the same textual aggregate matches across plans. */
   private def keyOf(e: Expression): String = e match {
     case a: AttributeReference => a.name
-    case c: Cast => s"cast(${keyOf(c.child)} as ${c.dataType.sql})"
+    // the exact-decimal cast kernels compute exactly this cast
+    case c @ (_: Cast | _: ExactCast | _: DoubleToDecimal) =>
+      s"cast(${keyOf(c.children.head)} as ${c.dataType.sql})"
     case l: Literal => l.sql
     case other =>
       s"${other.prettyName}(${other.children.map(keyOf).mkString(",")})"

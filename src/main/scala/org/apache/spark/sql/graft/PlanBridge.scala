@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.aggregate.ScalaAggregator
@@ -15,6 +16,11 @@ object PlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A Catalyst expression as a `Column`, and back: how the exact-decimal
+    * kernels build their helpers' columns without a registered SQL name. */
+  def column(e: Expression): Column = ExpressionUtils.column(e)
+  def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** SQL builder of a typed-Aggregator UDF (`functions.udaf(...)`), the
     * one `spark.udf.register` installs; `UserDefinedAggregator` is

@@ -46,6 +46,41 @@ class PlanSpec extends AnyFunSuite {
     assert(plan("q_topk").contains("TakeOrderedAndProject"))
   }
 
+  test("q1's exact-decimal aggregate runs in codegen on the fixed-point kernels") {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Multiply}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Partial, Sum}
+    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
+      ObjectHashAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.types.{DecimalType, DoubleType}
+    val df = SparkEntry.queries("q1_pricing_summary")(spark, sf)
+    df.collect()
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    val all = nodes(df.queryExecution.executedPlan)
+    val stages = all.collect { case w: WholeStageCodegenExec => w }
+    assert(!all.exists(n => n.isInstanceOf[ObjectHashAggregateExec] ||
+      n.isInstanceOf[SortAggregateExec]), all.mkString("\n"))
+    val partial = stages.flatMap(w => nodes(w.child)).collect {
+      case h: HashAggregateExec if h.aggregateExpressions.forall(_.mode == Partial) => h
+    }
+    assert(partial.nonEmpty, s"no codegen'd partial HashAggregate:\n${all.mkString("\n")}")
+    // per-row BigDecimal work left in a codegen stage
+    val perRowBigDecimal: PartialFunction[Expression, Expression] = {
+      case e: Sum if e.child.dataType.isInstanceOf[DecimalType] => e
+      case e: Multiply if e.dataType.isInstanceOf[DecimalType] => e
+      case e: Cast if e.child.dataType == DoubleType &&
+        e.dataType.isInstanceOf[DecimalType] => e
+    }
+    val left = stages.flatMap(w => nodes(w.child))
+      .flatMap(_.expressions.flatMap(_.collect(perRowBigDecimal)))
+    assert(left.isEmpty, left.mkString("\n"))
+  }
+
   test("aggregations have map-side partial aggregation") {
     val p = plan("q1_pricing_summary")
     assert("HashAggregate".r.findAllIn(p).size >= 2, p) // partial + final
