@@ -263,11 +263,11 @@ object StressBench {
     * path against its default twin in the same batch. */
   val confVariants: Map[String, (String, String)] = Map(
     "q_graph_hits+shuffle" ->
-      ("q_graph_hits", "spark.graft.hits.shuffleJoin=true"),
+      ("q_graph_hits", "spark.graft.graph.broadcastEdgeLimit=0"),
     "q_graph_triangles+shuffle" ->
-      ("q_graph_triangles", "spark.graft.triangles.shuffleJoin=true"),
+      ("q_graph_triangles", "spark.graft.graph.broadcastEdgeLimit=0"),
     "q_graph_clustering+shuffle" ->
-      ("q_graph_clustering", "spark.graft.clustering.shuffleJoin=true"),
+      ("q_graph_clustering", "spark.graft.graph.broadcastEdgeLimit=0"),
     "q_sim_ivf_rebalance+shuffle" ->
       ("q_sim_ivf_rebalance", "spark.graft.ivf.broadcastMemberLimit=0"),
     "q_sim_margin_mine+cells64" ->

@@ -25,8 +25,8 @@ object Verify {
     // change query OUTPUT (the policy-picked banding, a different IVF
     // cell count) while the DuckDB oracles replay the fixed defaults,
     // so a verify run with one set would red-flag queries that never
-    // drifted. Plan-shape knobs (shuffleJoin/broadcast limits) stay
-    // legal — those paths are bit-identical by contract.
+    // drifted. Plan-shape knobs (the broadcast limits) stay legal —
+    // those paths are bit-identical by contract.
     Seq("spark.graft.minhash.autoBanding", "spark.graft.ivf.cells",
       "spark.graft.audit.sampleShards",
       // r17: q_dedup_semantic's coarse K rides the shared resolver,

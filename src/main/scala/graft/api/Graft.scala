@@ -239,17 +239,19 @@ object Graft {
     * integer micro-units (floor division only, bit-stable). Returns
     * (`node`, `r`). Pass both edge directions for an undirected graph.
     *
-    * Scale: rank/degree broadcast map-side by default; when |V|
-    * outgrows the broadcast, `shuffleJoin = true` hash-partitions
-    * edges on src ONCE and every rank join becomes a co-partitioned
-    * shuffled-hash join (bit-identical — one shared core with the
-    * query library, pinned in GraftApiSpec/GraphSpec). */
+    * Scale: the edges are persisted and their node count |V| is
+    * measured when this is called (one job). While |V| is within
+    * `spark.graft.graph.broadcastEdgeLimit`, rank/degree broadcast
+    * map-side; past it, edges are hash-partitioned on src ONCE and
+    * every rank join becomes a co-partitioned shuffled-hash join
+    * (bit-identical — one shared core with the query library, pinned
+    * in GraftApiSpec/GraphSpec). */
   def pagerank(edges: DataFrame, src: String, dst: String,
-      iterations: Int = 3, shuffleJoin: Boolean = false): DataFrame = {
+      iterations: Int = 3): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     graft.ops.GraphOps.pagerankCore(
       edges.select(col(src).as("src"), col(dst).as("dst")),
-      iterations, shuffleJoin, personalized = false, seed = None)
+      iterations, personalized = false, seed = None)
   }
 
   /** Personalized PageRank / random-walk-with-restart (Page et al.
@@ -258,11 +260,10 @@ object Graft {
     * PROXIMITY to the seed. `seed = Some(id)` restarts at that node
     * (cast to the edge frame's node type); `None` picks the
     * top-degree node deterministically (deg DESC, node). Same core,
-    * same `shuffleJoin` scale path, same bit-identity guarantee as
-    * [[pagerank]]. Returns (`node`, `r`). */
+    * same |V| gate, same bit-identity guarantee as [[pagerank]].
+    * Returns (`node`, `r`). */
   def personalizedPagerank(edges: DataFrame, src: String, dst: String,
-      seed: Option[Any] = None, iterations: Int = 3,
-      shuffleJoin: Boolean = false): DataFrame = {
+      seed: Option[Any] = None, iterations: Int = 3): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     val e = edges.select(col(src).as("src"), col(dst).as("dst"))
     val seedDf = seed.map { v =>
@@ -270,18 +271,16 @@ object Graft {
         .select(lit(v).cast(edges.schema(src).dataType).as("seed"))
       (_: DataFrame) => sd
     }
-    graft.ops.GraphOps.pagerankCore(e, iterations, shuffleJoin,
+    graft.ops.GraphOps.pagerankCore(e, iterations,
       personalized = true, seed = seedDf)
   }
 
   /** Topic-sensitive PageRank (Haveliwala WWW 2002): restart mass
     * spreads uniformly (exact 1/|S| floor division) over a seed SET.
-    * Same core, same `shuffleJoin` scale path as [[pagerank]];
-    * the seed set collapses to one broadcast row. Returns
-    * (`node`, `r`). */
+    * Same core, same |V| gate as [[pagerank]]; the seed set
+    * collapses to one broadcast row. Returns (`node`, `r`). */
   def topicPagerank(edges: DataFrame, src: String, dst: String,
-      seeds: Seq[Any], iterations: Int = 3,
-      shuffleJoin: Boolean = false): DataFrame = {
+      seeds: Seq[Any], iterations: Int = 3): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(seeds.nonEmpty, "seeds must be non-empty")
     val t = edges.schema(src).dataType
@@ -290,7 +289,7 @@ object Graft {
       .reduce(_ unionByName _)
     graft.ops.GraphOps.pagerankCore(
       edges.select(col(src).as("src"), col(dst).as("dst")),
-      iterations, shuffleJoin, personalized = true,
+      iterations, personalized = true,
       seed = Some((_: DataFrame) => sd))
   }
 
@@ -314,14 +313,14 @@ object Graft {
     * wrapping (ADVICE r13).
     *
     * Scale: each of the `depth` sparse mat-vec passes costs one
-    * PageRank iteration — walk vectors broadcast map-side by default;
-    * `shuffleJoin = true` hash-partitions edges on src ONCE and every
-    * walk join becomes a co-partitioned shuffled-hash join (the
-    * pagerankCore discipline; bit-identical, pinned in GraftApiSpec
-    * on both paths). */
+    * PageRank iteration, behind the same |V| gate as [[pagerank]] —
+    * walk vectors broadcast map-side while |V| is within
+    * `spark.graft.graph.broadcastEdgeLimit`; past it, edges are
+    * hash-partitioned on src ONCE and every walk join becomes a
+    * co-partitioned shuffled-hash join (bit-identical, pinned in
+    * GraftApiSpec on both paths). */
   def katzCentrality(edges: DataFrame, src: String, dst: String,
-      invBeta: Int = 8, depth: Int = 3,
-      shuffleJoin: Boolean = false): DataFrame = {
+      invBeta: Int = 8, depth: Int = 3): DataFrame = {
     require(invBeta >= 2, "invBeta must be >= 2 (beta = 1/invBeta)")
     require(depth >= 1 && depth <= 12, "depth must be in [1, 12]")
     // scale factors are Long literals; the product headroom itself now
@@ -331,7 +330,7 @@ object Graft {
         "a Long scale factor")
     graft.ops.GraphOps.katzCore(
       edges.select(col(src).as("src"), col(dst).as("dst")),
-      invBeta, depth, shuffleJoin)
+      invBeta, depth)
   }
 
   /** Winnowing document-fingerprint near-dup pairs (Schleimer,

@@ -3,7 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Measured-cardinality broadcast↔shuffle gate — the shared discipline
-  * behind the graph family's `broadcastEdgeLimit` (r14), the IVF
+  * behind the graph family's one `broadcastEdgeLimit` (every graph
+  * operator's join hints go through it; r14), the IVF
   * rebalance's hot-cell member joins, and the LM-table joins of the
   * perplexity/RHO family (r15): a join side that is small at bench
   * scale but does NOT stay proportional to a dimension (edges densify
@@ -19,7 +20,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * changes (pinned per-family in GraphSpec / SimilaritySpec /
   * CorpusSpec). Limits are per-family confs with measured-crossover
   * defaults; setting a limit to 0 forces the shuffle path, to a huge
-  * value the broadcast path (the override semantics).
+  * value the broadcast path — the only override there is.
   */
 object AutoBroadcast {
 

@@ -89,57 +89,31 @@ object CorpusOps22 {
     *
     * Scale: edge list partial-aggregates once; each half-iteration is
     * one endpoint-keyed shuffle; the round max is a 1-row broadcast.
-    * On the small-graph path the per-round authority/hub vectors
-    * broadcast into the edge stream map-side — but BOTH axes scale
+    * On the small-graph path the per-round authority/hub vectors (and
+    * the final degree rollup) broadcast map-side — but BOTH axes scale
     * with the corpus (suppliers and customers are data, not
     * dimensions), so the path is AUTO-gated on the aggregated edge
     * cardinality (`spark.graft.graph.broadcastEdgeLimit`): past it,
     * edges hash-partition on `sup` ONCE (persisted) and each
     * auth/hub join becomes a shuffled-hash join where only the
     * |V|-sized vector side moves — the pagerankCore discipline.
-    * `spark.graft.hits.shuffleJoin=true|false` overrides the gate.
     * Integer micro-units throughout, so the two paths are
     * bit-identical (pinned in GraphSpec). */
-  val qGraphHits: Q = (s, dir) =>
-    s.conf.getOption("spark.graft.hits.shuffleJoin") match {
-      case Some(v) => hitsResult(s, dir, v == "true")
-      case None =>
-        // AUTO: both HITS axes are data (586k aggregated (c, sup)
-        // pairs at sf0.1 already), so the gate reads the aggregated
-        // edge cardinality from the persisted cache — past
-        // spark.graft.graph.broadcastEdgeLimit the vector joins go
-        // shuffled-hash. Measured (StressBench r14): at sf0.1 the
-        // shuffle path wins OUTRIGHT, 3.06 s vs 4.58 s at 1× and
-        // 5.04 s vs 6.79 s at 10× — the auto gate picks it there.
-        val e0 = graft.CacheScope.track(hitsEdges(s, dir).persist())
-        hitsFrom(e0, e0.count() > GraphOps.edgeLimit(s))
-    }
-
-  private def hitsEdges(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    Tables(s, dir, "lineitem")
+  val qGraphHits: Q = (s, dir) => {
+    // Both HITS axes are data (586k aggregated (c, sup) pairs at sf0.1
+    // already), so the gate reads the aggregated edge cardinality of
+    // the persisted edges. Measured (StressBench r14): at sf0.1 the
+    // shuffle path wins OUTRIGHT, 3.06 s vs 4.58 s at 1× and 5.04 s vs
+    // 6.79 s at 10× — the gate picks it there. On that path the sup
+    // partitioning feeds auth1's aggregate, the hub1 join and the final
+    // deg rollup with zero further |E| exchanges; only the c-keyed auth2
+    // join re-exchanges the edge stream (once, not per-iteration).
+    val edges0 = Tables(s, dir, "lineitem")
       .join(Tables(s, dir, "orders"),
         col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("sup"))
       .agg(count(lit(1)).as("w"))
-
-  /** HITS authority frame; `shuffleJoin` selects the scale path (see
-    * [[qGraphHits]]). Package-visible for the GraphSpec pin. */
-  private[graft] def hitsResult(s: org.apache.spark.sql.SparkSession,
-      dir: String, shuffleJoin: Boolean): org.apache.spark.sql.DataFrame =
-    hitsFrom(hitsEdges(s, dir), shuffleJoin)
-
-  private def hitsFrom(edges0: org.apache.spark.sql.DataFrame,
-      shuffleJoin: Boolean): org.apache.spark.sql.DataFrame = {
-    // scale path: pay ONE |E| shuffle up front — the sup partitioning
-    // feeds auth1's aggregate, the hub1 join and the final deg rollup
-    // with zero further |E| exchanges; only the c-keyed auth2 join
-    // re-exchanges the edge stream (once, not per-iteration)
-    val edges = graft.CacheScope.track(
-      (if (shuffleJoin) edges0.repartition(col("sup")) else edges0)
-        .persist())
-    def vec(df: org.apache.spark.sql.DataFrame) =
-      if (shuffleJoin) df.hint("shuffle_hash") else broadcast(df)
+    val (edges, vec) = GraphOps.gatedEdges(edges0, partitionOn = Some("sup"))
     def rescale(df: org.apache.spark.sql.DataFrame, vc: String) = {
       val mx = df.agg(max(col(vc)).as("mx"))
       df.crossJoin(broadcast(mx))
@@ -155,7 +129,7 @@ object CorpusOps22 {
       .groupBy(col("sup")).agg(sum(col("w") * col("h")).as("a")), "a")
     val deg = edges.groupBy(col("sup"))
       .agg(count(lit(1)).as("n_buyers"), sum(col("w")).as("n_lines"))
-    auth2.join(deg, Seq("sup"))
+    auth2.join(vec(deg), Seq("sup"))
       .select(col("sup").as("s_suppkey"), col("a").as("authority_micro"),
         col("n_buyers"), col("n_lines"))
       .orderBy(col("authority_micro").desc, col("s_suppkey"))

@@ -1,8 +1,9 @@
 package graft.ops
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.Tables
+import graft.{CacheScope, Tables}
 
 /** Relational graph analytics (SURVEY.md §2.M adjacents): fixed-point
   * PageRank over the supplier–customer interaction graph derived from
@@ -29,29 +30,23 @@ object GraphOps {
     * stream joins them MAP-SIDE, and the only shuffle per iteration
     * is the contribution aggregate on dst (partial-aggregated).
     * Edges are computed once and persisted (CacheScope-released).
-    * At a billion-node graph |V| outgrows the broadcast and the rank
-    * join flips to the co-partitioned SHUFFLE path below
-    * (`spark.graft.pagerank.shuffleJoin=true`): edges are hash-
-    * partitioned on src ONCE and persisted, the degree join and every
-    * per-iteration rank join are shuffled-hash joins that reuse that
-    * partitioning (zero |E| re-shuffles; only the |V|-sized rank side
-    * moves per iteration). Ranks are integer micro-units, so the two
-    * paths are bit-identical (pinned in GraphSpec). */
-  val qGraphPagerank: Q = (s, dir) => {
-    val shuffle = s.conf.getOption("spark.graft.pagerank.shuffleJoin")
-      .contains("true")
-    pagerankRanks(s, dir, shuffle)
-      .orderBy(col("r").desc, col("node")).limit(20)
-  }
+    * When the measured node count |V| passes [[edgeLimit]] the rank
+    * join flips to the co-partitioned SHUFFLE path of [[pagerankCore]]:
+    * edges are hash-partitioned on src ONCE and persisted, the degree
+    * join and every per-iteration rank join are shuffled-hash joins
+    * that reuse that partitioning (zero |E| re-shuffles; only the
+    * |V|-sized rank side moves per iteration). Ranks are integer
+    * micro-units, so the two paths are bit-identical (pinned in
+    * GraphSpec). */
+  val qGraphPagerank: Q = (s, dir) =>
+    pagerankRanks(s, dir).orderBy(col("r").desc, col("node")).limit(20)
 
-  /** Full post-iteration rank frame; `shuffleJoin` selects the scale
-    * path (see [[qGraphPagerank]]). Package-visible so the spec can pin
-    * broadcast/shuffle trajectory equality over ALL nodes, not just the
-    * presented top-20. */
-  private[graft] def pagerankRanks(s: org.apache.spark.sql.SparkSession,
-      dir: String, shuffleJoin: Boolean): org.apache.spark.sql.DataFrame =
+  /** Full post-iteration rank frame of [[qGraphPagerank]].
+    * Package-visible so the spec can pin broadcast/shuffle trajectory
+    * equality over ALL nodes, not just the presented top-20. */
+  private[graft] def pagerankRanks(s: SparkSession, dir: String): DataFrame =
     pagerankCore(supplierCustomerEdges(s, dir), iterations = 3,
-      shuffleJoin = shuffleJoin, personalized = false, seed = None)
+      personalized = false, seed = None)
 
   /** The shared supplier–customer bipartite edge frame (undirected:
     * both directions emitted) of [[qGraphPagerank]] and [[qGraphPpr]]. */
@@ -86,33 +81,22 @@ object GraphOps {
     * O(1) state — never a |V|-keyed join.
     *
     * Scale: the per-node state (rank, degree) is |V| rows while the
-    * edge set is |E| >> |V| — on the default path rank and degree
-    * broadcast and the edge stream joins them MAP-SIDE; the only
-    * shuffle per iteration is the contribution aggregate on dst
-    * (partial-aggregated). When |V| outgrows the broadcast,
-    * `shuffleJoin = true` hash-partitions edges on src ONCE
-    * (persisted) and every deg/rank join becomes a shuffled-hash join
-    * riding that partitioning — zero |E| re-shuffles, only the
-    * |V|-sized rank side moves per iteration. All arithmetic is floor
-    * division and exact integer sums, so the two paths are
-    * bit-identical (pinned in GraphSpec for BOTH variants). */
-  private[graft] def pagerankCore(edges0: org.apache.spark.sql.DataFrame,
-      iterations: Int, shuffleJoin: Boolean, personalized: Boolean,
-      seed: Option[org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.DataFrame])
-      : org.apache.spark.sql.DataFrame = {
-    // Broadcast path: edges persist as-is, deg/rank broadcast map-side.
-    // Shuffle path: pay ONE |E| shuffle up front (hash-partition on src,
-    // persisted) — the persisted partitioning satisfies the join
-    // requirement on every later src-keyed join, so no further |E|
-    // exchange ever runs.
-    val edges = graft.CacheScope.track(
-      (if (shuffleJoin) edges0.repartition(col("src")) else edges0)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    * edge set is |E| >> |V| — while the measured |V| is within
+    * [[edgeLimit]], rank and degree broadcast and the edge stream
+    * joins them MAP-SIDE; the only shuffle per iteration is the
+    * contribution aggregate on dst (partial-aggregated). Past it, edges
+    * are hash-partitioned on src ONCE (persisted) and every deg/rank
+    * join becomes a shuffled-hash join riding that partitioning — zero
+    * |E| re-shuffles, only the |V|-sized rank side moves per
+    * iteration. All arithmetic is floor division and exact integer
+    * sums, so the two paths are bit-identical (pinned in GraphSpec for
+    * BOTH variants). */
+  private[graft] def pagerankCore(edges0: DataFrame, iterations: Int,
+      personalized: Boolean, seed: Option[DataFrame => DataFrame])
+      : DataFrame = {
+    val (edges, small) = gatedEdges(edges0, nodeCount, Some("src"))
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val edgesD = if (shuffleJoin)
-      edges.join(deg.hint("shuffle_hash"), Seq("src"))
-    else edges.join(broadcast(deg), Seq("src"))
+    val edgesD = edges.join(small(deg), Seq("src"))
     val seedDf = if (!personalized) None else {
       val sd = seed.map(_(deg)).getOrElse(
         deg.orderBy(col("deg").desc, col("src")).limit(1)
@@ -136,13 +120,10 @@ object GraphOps {
       // lineage, so an unpersisted chain recomputes iteration k-1 (and
       // everything before it) inside iteration k — 1+2+3 passes
       // instead of 3 (measured ~40% of the query's runtime)
-      val joined = if (shuffleJoin)
-        edgesD.join(rank.hint("shuffle_hash"), col("src") === col("node"))
-      else edgesD.join(broadcast(rank), col("src") === col("node"))
-      val contrib = joined
+      val contrib = edgesD.join(small(rank), col("src") === col("node"))
         .select(col("dst"), expr("r div deg").as("c"))
         .groupBy(col("dst"))
-      rank = graft.CacheScope.track((seedDf match {
+      rank = CacheScope.track((seedDf match {
         case None => contrib
           .agg(expr("cast(150000 + (sum(c) * 85) div 100 as bigint)")
             .as("r"))
@@ -159,13 +140,12 @@ object GraphOps {
     rank
   }
 
-  /** Full post-iteration personalized-PageRank frame; `shuffleJoin`
-    * selects the scale path exactly as [[pagerankRanks]] does (same
-    * core, same conf gate, same bit-identity guarantee). */
-  private[graft] def pprRanks(s: org.apache.spark.sql.SparkSession,
-      dir: String, shuffleJoin: Boolean): org.apache.spark.sql.DataFrame =
+  /** Full post-iteration personalized-PageRank frame of [[qGraphPpr]]
+    * (same core, same gate, same bit-identity guarantee as
+    * [[pagerankRanks]]). */
+  private[graft] def pprRanks(s: SparkSession, dir: String): DataFrame =
     pagerankCore(supplierCustomerEdges(s, dir), iterations = 3,
-      shuffleJoin = shuffleJoin, personalized = true, seed = None)
+      personalized = true, seed = None)
 
   /** Support-pruned part co-purchase edges (u < v, co-ordered >= 2
     * times): the shared graph of the triangle census and k-core
@@ -209,67 +189,24 @@ object GraphOps {
     * cardinality of its own persisted edge cache and flips every
     * broadcast hint to a shuffled-hash equi-join co-partitioned on
     * the shared key (wedges on u, closing probe on (u, v)) past
-    * `spark.graft.graph.broadcastEdgeLimit` (default 100k; measured
-    * crossover is between 3.5k and 1.2M edges — StressBench r14:
-    * broadcast 0.85 s vs shuffle 2.28 s at 3.5k, 11.1 s vs 5.2 s at
-    * 1.2M). `spark.graft.triangles.shuffleJoin=true|false` overrides
-    * the gate outright. Counts are exact integers, so the two paths
-    * are bit-identical (pinned in GraphSpec; PlanSpec asserts no
+    * [[edgeLimit]]. Counts are exact integers, so the two paths are
+    * bit-identical (pinned in GraphSpec; PlanSpec asserts no
     * data-scaling BroadcastExchange on the scale path). */
-  val qGraphTriangles: Q = (s, dir) =>
-    s.conf.getOption("spark.graft.triangles.shuffleJoin") match {
-      case Some(v) => trianglesResult(s, dir, v == "true")
-      case None =>
-        // AUTO (conf unset): pick the path from the MEASURED pruned
-        // edge count — the prune does NOT keep |E'| proportional to
-        // corpus size once the part catalog is fixed (10× lineitem
-        // over the same parts densified 3 573 → 1 196 000 edges, and
-        // the forced-broadcast census went 0.85 → 11.1 s, 13× —
-        // StressBench r14 — while the shuffle path held 2.3×). The
-        // count is a bounded scalar on the ALREADY-persisted edge
-        // cache that every downstream stage reuses.
-        val e0 = graft.CacheScope.track(
-          copurchaseEdges(s, dir).persist(StorageLevel.MEMORY_AND_DISK))
-        trianglesFrom(e0, e0.count() > edgeLimit(s))
-    }
-
-  /** Explicit-threshold knob for the AUTO broadcast↔shuffle gates of
-    * the triangle/clustering/HITS family: edge frames above this
-    * cardinality take the co-partitioned shuffled-hash path. The
-    * default sits between the sf0.1 fixture (3.5k pruned edges,
-    * broadcast wins 0.85 s vs 2.28 s) and the 10× stress corpus
-    * (1.2M edges, shuffle wins 5.2 s vs 11.1 s). */
-  private[ops] def edgeLimit(s: org.apache.spark.sql.SparkSession): Long =
-    AutoBroadcast.limit(s, "spark.graft.graph.broadcastEdgeLimit", 100000L)
-
-  /** Triangle-census frame; `shuffleJoin` selects the scale path (see
-    * [[qGraphTriangles]]). Package-visible so the spec can pin
-    * broadcast/shuffle bit-identity. */
-  private[graft] def trianglesResult(s: org.apache.spark.sql.SparkSession,
-      dir: String, shuffleJoin: Boolean): org.apache.spark.sql.DataFrame = {
+  val qGraphTriangles: Q = (s, dir) => {
     // e0 is the only |lineitem|-sized stage and feeds und (twice), deg,
     // the oriented join and the summary count — persist or the
-    // self-join re-runs ~5x (the q_graph_pagerank lesson).
-    val e0 = graft.CacheScope.track(
-      copurchaseEdges(s, dir).persist(StorageLevel.MEMORY_AND_DISK))
-    trianglesFrom(e0, shuffleJoin)
-  }
-
-  private def trianglesFrom(e0: org.apache.spark.sql.DataFrame,
-      shuffleJoin: Boolean): org.apache.spark.sql.DataFrame = {
-    // On the scale path the small side of each join rides a
-    // shuffled-hash hint instead of a broadcast: the |V|-sized degree
-    // table and the pruned |E'| oriented edge list never collect at
-    // the driver, only hash-exchange on their join key.
-    def small(df: org.apache.spark.sql.DataFrame) =
-      if (shuffleJoin) df.hint("shuffle_hash") else broadcast(df)
+    // self-join re-runs ~5x (the q_graph_pagerank lesson). Its count
+    // picks the path; on the scale path the |V|-sized degree table and
+    // the pruned |E'| oriented edge list never collect at the driver,
+    // only hash-exchange on their key.
+    val (e0, small) = gatedEdges(copurchaseEdges(s, dir))
     val und = e0.union(e0.select(col("v"), col("u")))
     val deg = und.groupBy(col("u").as("n")).agg(count(lit(1)).as("d"))
     // the oriented edge keeps the DESTINATION's (degree, node) key: the
     // wedge pair below must be ordered by the SAME key the orientation
     // uses, or closing edges whose degree order disagrees with node-id
     // order are never probed (undercounts ~50%, caught in r8 review)
-    val o = graft.CacheScope.track(und
+    val o = CacheScope.track(und
       .join(small(deg.as("du")), col("u") === col("du.n"))
       .join(small(deg.as("dv")), col("v") === col("dv.n"))
       .filter(struct(col("du.d"), col("u")) < struct(col("dv.d"), col("v")))
@@ -301,6 +238,54 @@ object GraphOps {
       .orderBy(col("kind"), col("cnt").desc, col("node"))
   }
 
+  /** The graph family's one broadcast↔shuffle limit
+    * (`spark.graft.graph.broadcastEdgeLimit`): an operator whose
+    * measured size is above it takes the co-partitioned shuffled-hash
+    * path; 0 forces that path for every graph operator, `Long.MaxValue`
+    * forces broadcast. The default sits between the sf0.1 fixture
+    * (3.5k pruned co-purchase edges, broadcast wins 0.85 s vs 2.28 s)
+    * and the 10× stress corpus (1.2M edges, shuffle wins 5.2 s vs
+    * 11.1 s — StressBench r14). */
+  private def edgeLimit(s: SparkSession): Long =
+    AutoBroadcast.limit(s, "spark.graft.graph.broadcastEdgeLimit", 100000L)
+
+  /** Persists `edges0` (CacheScope-tracked) and measures the cached copy
+    * with `measure`, which must bound the largest side the operator
+    * broadcasts. Returns the edges and the hint for each such side —
+    * [[AutoBroadcast.gate]] against [[edgeLimit]]. On the shuffle path
+    * with `partitionOn` set the edges are hash-partitioned on that key
+    * ONCE and persisted, so every later join on it reuses the
+    * partitioning; the unpartitioned copy is released as soon as the
+    * partitioned one is materialized, so no |E|-sized frame stays
+    * cached twice. */
+  private[ops] def gatedEdges(edges0: DataFrame,
+      measure: DataFrame => Long = _.count(),
+      partitionOn: Option[String] = None)
+      : (DataFrame, DataFrame => DataFrame) = {
+    val limit = edgeLimit(edges0.sparkSession)
+    val edges = CacheScope.track(
+      edges0.persist(StorageLevel.MEMORY_AND_DISK))
+    val measured = measure(edges)
+    val small = (df: DataFrame) => AutoBroadcast.gate(df, measured, limit)
+    partitionOn.filter(_ => measured > limit) match {
+      case None => (edges, small)
+      case Some(key) =>
+        val byKey = CacheScope.track(edges.repartition(col(key))
+          .persist(StorageLevel.MEMORY_AND_DISK))
+        byKey.count()
+        edges.unpersist()
+        (byKey, small)
+    }
+  }
+
+  /** |V| of a (`src`, `dst`) edge frame: bounds the degree, rank and
+    * walk tables the rank/walk loops broadcast (each is keyed by one
+    * endpoint). The edge count would be the wrong measure there — the
+    * supplier–customer graph has 2.9k–1.2M edges over 160–16k nodes
+    * across the fixtures. */
+  private def nodeCount(edges: DataFrame): Long =
+    edges.select(explode(array(col("src"), col("dst")))).distinct().count()
+
   /** Three unrolled k-core peeling rounds (Seidman 1983, k=3) over the
     * same support-pruned co-purchase graph as the triangle census:
     * each round drops nodes of degree < k and induces the remaining
@@ -312,47 +297,29 @@ object GraphOps {
     * Scale: the surviving node set is |V|-sized and broadcasts into
     * both endpoint filters; each round's induced edge list is
     * persisted (the iterative-broadcast lesson — an unpersisted chain
-    * re-peels every earlier round inside round r). At a graph where
-    * |V| outgrows broadcast, set `spark.graft.kcore.shuffleJoin=true`:
-    * both endpoint filters become shuffled-hash LEFT SEMI joins
-    * co-partitioned on the endpoint (the survivor side is the small
-    * side of each shuffle), bit-identical to the broadcast path
-    * (pinned in GraphSpec). */
+    * re-peels every earlier round inside round r). Once the measured
+    * pruned edge count passes [[edgeLimit]], both endpoint filters
+    * become shuffled-hash LEFT SEMI joins co-partitioned on the
+    * endpoint (the survivor side is the small side of each shuffle),
+    * bit-identical to the broadcast path (pinned in GraphSpec). */
   val qGraphKcore: Q = (s, dir) => {
-    val shuffle = s.conf.getOption("spark.graft.kcore.shuffleJoin")
-      .contains("true")
-    kcoreResult(s, dir, shuffle)
-  }
-
-  private[graft] def kcoreResult(s: org.apache.spark.sql.SparkSession,
-      dir: String, shuffleJoin: Boolean): org.apache.spark.sql.DataFrame = {
     val k = 3
     // persist: the union below evaluates e0 twice (no exchange reuse
     // across union branches), and e0 is the lineitem self-join
-    val e0 = graft.CacheScope.track(
-      copurchaseEdges(s, dir).persist(StorageLevel.MEMORY_AND_DISK))
-    var und = graft.CacheScope.track(
+    val (e0, small) = gatedEdges(copurchaseEdges(s, dir))
+    var und = CacheScope.track(
       e0.union(e0.select(col("v").as("u"), col("u").as("v")))
         .persist(StorageLevel.MEMORY_AND_DISK))
-    var summaries = Seq.empty[org.apache.spark.sql.DataFrame]
+    var summaries = Seq.empty[DataFrame]
     for (r <- 1 to 3) {
       val keep = und.groupBy(col("u")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("u").as("n"))
-      // Broadcast path: inner joins against the broadcast survivor set
-      // (distinct by construction, so inner == semi). Shuffle path: LEFT
-      // SEMI shuffled-hash joins — edges shuffle once per endpoint, the
-      // survivor set is the build side, and no |V| broadcast ever happens.
-      und = graft.CacheScope.track((
-        if (shuffleJoin) und
-          .join(keep.as("ka").hint("shuffle_hash"),
-            col("u") === col("ka.n"), "left_semi")
-          .join(keep.as("kb").hint("shuffle_hash"),
-            col("v") === col("kb.n"), "left_semi")
-        else und
-          .join(broadcast(keep.as("ka")), col("u") === col("ka.n"))
-          .select(col("u"), col("v"))
-          .join(broadcast(keep.as("kb")), col("v") === col("kb.n"))
-          .select(col("u"), col("v")))
+      // LEFT SEMI joins against the survivor set: broadcast, or on the
+      // scale path shuffled-hash with the survivor set as build side
+      // (edges shuffle once per endpoint, no |V| broadcast).
+      und = CacheScope.track(und
+        .join(small(keep.as("ka")), col("u") === col("ka.n"), "left_semi")
+        .join(small(keep.as("kb")), col("v") === col("kb.n"), "left_semi")
         .persist(StorageLevel.MEMORY_AND_DISK))
       summaries = summaries :+ und
         .agg(countDistinct(col("u")).as("a"),
@@ -377,25 +344,23 @@ object GraphOps {
     *
     * Scale: identical wedge-join discipline to the triangle census —
     * the support-pruned edge set bounds density, the wedge fan-out is
-    * per-node-degree-bounded, the existing-edge exclusion is a
-    * broadcast LEFT ANTI probe, and the degree table broadcasts. The
-    * top-20 lowers to TakeOrderedAndProject. */
+    * per-node-degree-bounded, the existing-edge exclusion is a LEFT
+    * ANTI probe, and one wedge side, the probe and the degree table
+    * are the small sides. Same gate as there: while the persisted
+    * pruned edge count is within [[edgeLimit]] they broadcast, past it
+    * each becomes a co-partitioned shuffled-hash join. The top-20
+    * lowers to TakeOrderedAndProject. */
   val qGraphLinkpred: Q = (s, dir) => {
-    val e0 = graft.CacheScope.track(
-      copurchaseEdges(s, dir).persist(StorageLevel.MEMORY_AND_DISK))
+    val (e0, small) = gatedEdges(copurchaseEdges(s, dir))
     val und = e0.union(e0.select(col("v"), col("u")))
     val deg = und.groupBy(col("u").as("n")).agg(count(lit(1)).as("d"))
-    // the support-pruned edge set is tiny (triangles' measured ~4k rows
-    // at sf0.1) — broadcast one wedge side like the triangle census; at
-    // a scale where it stops broadcasting this becomes a co-partitioned
-    // shuffle equi-join on the shared wedge center, same as there
-    val wedge = und.as("x").join(broadcast(und.as("y")),
+    val wedge = und.as("x").join(small(und.as("y")),
         col("x.u") === col("y.u") && col("x.v") < col("y.v"))
       .select(col("x.v").as("a"), col("y.v").as("b"), col("x.u").as("z"))
     wedge
-      .join(broadcast(e0),
+      .join(small(e0),
         wedge("a") === e0("u") && wedge("b") === e0("v"), "left_anti")
-      .join(broadcast(deg), col("z") === col("n"))
+      .join(small(deg), col("z") === col("n"))
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("common"),
         sum(expr(
@@ -453,17 +418,14 @@ object GraphOps {
     * [[qGraphPagerank]], micro fixed point, floor division only.
     *
     * Scale: same cost class as PageRank — per-iteration one
-    * rank-to-edges equi-join (rank broadcasts; the SAME conf gate as
-    * [[qGraphPagerank]], `spark.graft.pagerank.shuffleJoin=true`,
-    * flips it to the co-partitioned shuffled-hash path — one shared
-    * [[pagerankCore]], bit-identical, GraphSpec-pinned) and one
-    * partial-aggregated sum; the seed is a 1-row broadcast. */
-  val qGraphPpr: Q = (s, dir) => {
-    val shuffle = s.conf.getOption("spark.graft.pagerank.shuffleJoin")
-      .contains("true")
-    pprRanks(s, dir, shuffle).filter(col("r") > 0)
+    * rank-to-edges equi-join (rank broadcasts; the SAME |V| gate as
+    * [[qGraphPagerank]] flips it to the co-partitioned shuffled-hash
+    * path — one shared [[pagerankCore]], bit-identical,
+    * GraphSpec-pinned) and one partial-aggregated sum; the seed is a
+    * 1-row broadcast. */
+  val qGraphPpr: Q = (s, dir) =>
+    pprRanks(s, dir).filter(col("r") > 0)
       .orderBy(col("r").desc, col("node")).limit(20)
-  }
 
   /** Topic-sensitive PageRank (Haveliwala, WWW 2002): the restart
     * mass spreads UNIFORMLY over a topic's seed SET instead of one
@@ -476,20 +438,17 @@ object GraphOps {
     *
     * Scale: identical cost class to [[qGraphPpr]] — the seed set
     * collapses to ONE broadcast row (array + count), membership is an
-    * array_contains against O(|S|) state, and the same
-    * `spark.graft.pagerank.shuffleJoin` gate flips the rank joins to
-    * the co-partitioned shuffle path (shared [[pagerankCore]]). */
-  val qGraphPprTopic: Q = (s, dir) => {
-    val shuffle = s.conf.getOption("spark.graft.pagerank.shuffleJoin")
-      .contains("true")
+    * array_contains against O(|S|) state, and the same |V| gate
+    * flips the rank joins to the co-partitioned shuffle path (shared
+    * [[pagerankCore]]). */
+  val qGraphPprTopic: Q = (s, dir) =>
     pagerankCore(supplierCustomerEdges(s, dir), iterations = 3,
-      shuffleJoin = shuffle, personalized = true,
+      personalized = true,
       seed = Some(deg => deg.filter(col("src").startsWith("S"))
         .orderBy(col("deg").desc, col("src")).limit(5)
         .select(col("src").as("seed"))))
       .filter(col("r") > 0)
       .orderBy(col("r").desc, col("node")).limit(20)
-  }
 
   /** Truncated Katz centrality (Katz, Psychometrika 1953):
     * K(v) = Σ_{k=1..3} βᵏ · walks_k(v) with β = 1/8, where
@@ -503,24 +462,13 @@ object GraphOps {
     * seeded w₀ = 1; top-20 by (katz_x512 DESC, node).
     *
     * Scale: same cost class as one PageRank iteration each — the
-    * |V|-row walk vector broadcasts against the edge stream (the
-    * conf-gated shuffle discipline would apply identically), and the
-    * per-step aggregate is partial-aggregated on dst. */
+    * |V|-row walk vector broadcasts against the edge stream, and past
+    * [[edgeLimit]] nodes takes the co-partitioned shuffle path of
+    * [[pagerankCore]] (pure integer sums, so the paths are
+    * bit-identical — GraphSpec pin); the per-step aggregate is
+    * partial-aggregated on dst. */
   val qGraphKatz: Q = (s, dir) => {
-    val shuffle = s.conf.getOption("spark.graft.pagerank.shuffleJoin")
-      .contains("true")
-    katzWalks(s, dir, shuffle)
-  }
-
-  /** The Katz walk table; `shuffleJoin` selects the same conf-gated
-    * co-partitioned scale path as [[pagerankCore]] (edges
-    * hash-partitioned on src once, walk vectors shuffled-hash-joined
-    * instead of broadcast) — pure integer sums, so the paths are
-    * bit-identical (GraphSpec pin). */
-  private[graft] def katzWalks(s: org.apache.spark.sql.SparkSession,
-      dir: String, shuffleJoin: Boolean): org.apache.spark.sql.DataFrame = {
-    val walks =
-      katzWalkTables(supplierCustomerEdges(s, dir), 3, shuffleJoin)
+    val walks = katzWalkTables(supplierCustomerEdges(s, dir), 3)
     walks(0).select(col("node"), col("w").as("w1"))
       .join(walks(1).select(col("node"), col("w").as("w2")), Seq("node"))
       .join(walks(2).select(col("node"), col("w").as("w3")), Seq("node"))
@@ -530,25 +478,20 @@ object GraphOps {
   }
 
   /** The `depth` sparse mat-vec walk-count passes behind
-    * [[katzWalks]] and the public `Graft.katzCentrality`: element i
+    * [[qGraphKatz]] and the public `Graft.katzCentrality`: element i
     * (1-based length-i walks) is w_i(v) = Σ_{u→v} w_{i-1}(u), seeded
-    * w₀ = 1 at every source node. `shuffleJoin` = the pagerankCore
-    * scale discipline (edges hash-partitioned on src once, walk
-    * vectors shuffled-hash-joined instead of broadcast); integer
-    * sums only, so the paths are bit-identical. */
-  private[graft] def katzWalkTables(
-      edges0: org.apache.spark.sql.DataFrame, depth: Int,
-      shuffleJoin: Boolean): Seq[org.apache.spark.sql.DataFrame] = {
-    val edges = graft.CacheScope.track(
-      (if (shuffleJoin) edges0.repartition(col("src")) else edges0)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    * w₀ = 1 at every source node. Same |V| gate and scale discipline as
+    * [[pagerankCore]] (edges hash-partitioned on src once, walk vectors
+    * shuffled-hash-joined instead of broadcast); integer sums only, so
+    * the paths are bit-identical. */
+  private def katzWalkTables(edges0: DataFrame, depth: Int)
+      : Seq[DataFrame] = {
+    val (edges, small) = gatedEdges(edges0, nodeCount, Some("src"))
     var w = edges.select(col("src").as("node")).distinct()
       .select(col("node"), lit(1L).as("w"))
     (1 to depth).map { _ =>
-      val joined = if (shuffleJoin)
-        edges.join(w.hint("shuffle_hash"), col("src") === col("node"))
-      else edges.join(broadcast(w), col("src") === col("node"))
-      w = graft.CacheScope.track(joined
+      w = CacheScope.track(edges
+        .join(small(w), col("src") === col("node"))
         .groupBy(col("dst"))
         .agg(sum(col("w")).as("w"))
         .select(col("dst").as("node"), col("w"))
@@ -564,10 +507,9 @@ object GraphOps {
     * SOME walk lengths but not others still gets exact credit for the
     * walks it has (outer union-aggregate, not the presentation inner
     * join of the fixed-depth query). Returns (node, katz_scaled). */
-  private[graft] def katzCore(edges0: org.apache.spark.sql.DataFrame,
-      invBeta: Int, depth: Int, shuffleJoin: Boolean)
-      : org.apache.spark.sql.DataFrame = {
-    val walks = katzWalkTables(edges0, depth, shuffleJoin)
+  private[graft] def katzCore(edges0: DataFrame, invBeta: Int, depth: Int)
+      : DataFrame = {
+    val walks = katzWalkTables(edges0, depth)
     // the scaled products and their sum are carried in DECIMAL(38,0)
     // (the pass@k falling-factorial pattern): walks_i(v) on a dense
     // graph easily exceeds the 2^20 headroom a pure-Long product would

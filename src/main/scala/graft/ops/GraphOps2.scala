@@ -49,35 +49,13 @@ object GraphOps2 {
     * edge growth that sent the forced-broadcast triangle census 13×
     * superlinear at 10×, StressBench r14), flipping every broadcast
     * hint to a shuffled-hash equi-join co-partitioned on the shared
-    * key past `spark.graft.graph.broadcastEdgeLimit`;
-    * `spark.graft.clustering.shuffleJoin=true|false` overrides the
-    * gate (bit-identity pinned in GraphSpec, no data-scaling
-    * BroadcastExchange asserted in PlanSpec); per-node credit is an
-    * explode of the triangle set (|tri| rows, not |V|²). */
-  val qGraphClustering: Q = (s, dir) =>
-    s.conf.getOption("spark.graft.clustering.shuffleJoin") match {
-      case Some(v) => clusteringResult(s, dir, v == "true")
-      case None =>
-        val e0 = graft.CacheScope.track(weightedEdges(s, dir)
-          .select(col("u"), col("v"))
-          .persist(StorageLevel.MEMORY_AND_DISK))
-        clusteringFrom(e0, e0.count() > GraphOps.edgeLimit(s))
-    }
-
-  /** Clustering-coefficient frame; `shuffleJoin` selects the scale
-    * path (see [[qGraphClustering]]). Package-visible for the
-    * GraphSpec bit-identity pin. */
-  private[graft] def clusteringResult(s: org.apache.spark.sql.SparkSession,
-      dir: String, shuffleJoin: Boolean): DataFrame = {
-    val e0 = graft.CacheScope.track(weightedEdges(s, dir)
-      .select(col("u"), col("v")).persist(StorageLevel.MEMORY_AND_DISK))
-    clusteringFrom(e0, shuffleJoin)
-  }
-
-  private def clusteringFrom(e0: DataFrame,
-      shuffleJoin: Boolean): DataFrame = {
-    def small(df: DataFrame) =
-      if (shuffleJoin) df.hint("shuffle_hash") else broadcast(df)
+    * key past `spark.graft.graph.broadcastEdgeLimit` (bit-identity
+    * pinned in GraphSpec, no data-scaling BroadcastExchange asserted
+    * in PlanSpec); per-node credit is an explode of the triangle set
+    * (|tri| rows, not |V|²). */
+  val qGraphClustering: Q = (s, dir) => {
+    val (e0, small) =
+      GraphOps.gatedEdges(weightedEdges(s, dir).select(col("u"), col("v")))
     val und = e0.union(e0.select(col("v"), col("u")))
     val deg = graft.CacheScope.track(
       und.groupBy(col("u").as("n")).agg(count(lit(1)).as("d")).persist())

@@ -198,14 +198,14 @@ class GraftApiSpec extends AnyFunSuite {
   test("pagerank facade == library ranks on both join paths") {
     def srt(rows: Seq[org.apache.spark.sql.Row]) =
       rows.sortBy(_.getString(0))
-    for (shuffle <- Seq(false, true)) {
+    for (limit <- Seq(Long.MaxValue, 0L)) withEdgeLimit(limit) {
       val api = try srt(Graft.pagerank(scEdges, "a", "b",
-          iterations = 3, shuffleJoin = shuffle).collect().toSeq)
+          iterations = 3).collect().toSeq)
         finally CacheScope.release()
       val lib = try srt(graft.ops.GraphOps
-          .pagerankRanks(spark, sf, shuffle).collect().toSeq)
+          .pagerankRanks(spark, sf).collect().toSeq)
         finally CacheScope.release()
-      assert(api.nonEmpty && api == lib, s"shuffleJoin=$shuffle diverges")
+      assert(api.nonEmpty && api == lib, s"edge limit $limit diverges")
     }
   }
 
@@ -213,7 +213,8 @@ class GraftApiSpec extends AnyFunSuite {
     val api = try Graft.personalizedPagerank(scEdges, "a", "b")
         .orderBy(col("node")).collect().toSeq
       finally CacheScope.release()
-    val lib = try graft.ops.GraphOps.pprRanks(spark, sf, shuffleJoin = false)
+    val lib = try withEdgeLimit(Long.MaxValue)(
+        graft.ops.GraphOps.pprRanks(spark, sf))
         .orderBy(col("node")).collect().toSeq
       finally CacheScope.release()
     assert(api.nonEmpty && api == lib)
@@ -238,25 +239,25 @@ class GraftApiSpec extends AnyFunSuite {
 
   test("katzCentrality facade == library katz on both join paths") {
     // at the query's operating point (invBeta = 8, depth = 3) the
-    // facade's katz_scaled must reproduce katzWalks' katz_x512 for
+    // facade's katz_scaled must reproduce q_graph_katz's katz_x512 for
     // every presented top-20 node, on BOTH join paths
-    val lib = try graft.ops.GraphOps.katzWalks(spark, sf,
-        shuffleJoin = false)
+    val lib = try withEdgeLimit(Long.MaxValue)(
+        graft.ops.GraphOps.qGraphKatz(spark, sf))
         .select(col("node"), col("katz_x512")).collect().toSeq
       finally CacheScope.release()
     assert(lib.nonEmpty)
-    for (shuffle <- Seq(false, true)) {
+    for (limit <- Seq(Long.MaxValue, 0L)) withEdgeLimit(limit) {
       // katz_scaled is DECIMAL(38,0) (ADVICE r13 headroom fix);
       // longValueExact throws if a value ever stops fitting — which
       // would itself be a regression at this fixture scale
       val api = try Graft.katzCentrality(scEdges, "a", "b",
-          invBeta = 8, depth = 3, shuffleJoin = shuffle).collect()
+          invBeta = 8, depth = 3).collect()
           .map(r => r.getString(0) ->
             r.getDecimal(1).toBigInteger.longValueExact()).toMap
         finally CacheScope.release()
       lib.foreach { r =>
         assert(api(r.getString(0)) == r.getLong(1),
-          s"node ${r.getString(0)} diverges (shuffleJoin=$shuffle)")
+          s"node ${r.getString(0)} diverges (edge limit $limit)")
       }
     }
     // the exposed depth knob: depth = 1 is exactly indegree (w1)

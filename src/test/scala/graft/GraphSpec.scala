@@ -33,30 +33,40 @@ class GraphSpec extends AnyFunSuite {
     assert(reported > 0)
   }
 
+  /** The nine public graph queries behind the one edge-limit gate. */
+  private val gated = Seq("q_graph_pagerank", "q_graph_ppr",
+    "q_graph_ppr_topic", "q_graph_katz", "q_graph_kcore",
+    "q_graph_triangles", "q_graph_clustering", "q_graph_hits",
+    "q_graph_linkpred")
+
+  /** `frame` collected on the broadcast path (limit `Long.MaxValue`)
+    * and on the shuffle path (limit 0), persists released after each. */
+  private def bothPaths(frame: => org.apache.spark.sql.DataFrame)
+      : (Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row]) = {
+    def run(limit: Long) = withEdgeLimit(limit) {
+      try frame.collect().toSeq finally CacheScope.release()
+    }
+    (run(Long.MaxValue), run(0L))
+  }
+
   test("pagerank broadcast and shuffle-join paths are bit-identical") {
     // Ranks are integer micro-units (floor-div + integer sums only), so
     // the co-partitioned shuffle path must reproduce the broadcast
     // trajectory EXACTLY over all nodes — at sf0.01, where the graph is
     // big enough for a real multi-partition shuffle.
     val dir = "/root/testdata/sf0.01"
-    def ranks(shuffle: Boolean) = try
-      ops.GraphOps.pagerankRanks(spark, dir, shuffle)
-        .orderBy(col("node")).collect().toSeq
-    finally CacheScope.release()
-    val b = ranks(shuffle = false)
-    val sh = ranks(shuffle = true)
+    val (b, sh) = bothPaths(
+      ops.GraphOps.pagerankRanks(spark, dir).orderBy(col("node")))
     assert(b.nonEmpty && b == sh,
       s"broadcast/shuffle diverge: ${b.take(3)} vs ${sh.take(3)}")
-    // and the conf gate actually routes the public query
-    spark.conf.set("spark.graft.pagerank.shuffleJoin", "true")
-    try {
-      val viaConf = SparkEntry.queries("q_graph_pagerank")(spark, dir)
-        .collect().toSeq
-      val top = b.sortBy(r => (-r.getLong(1), r.getString(0))).take(20)
-      assert(viaConf == top)
-    } finally {
-      spark.conf.unset("spark.graft.pagerank.shuffleJoin")
-      CacheScope.release()
+    // and the gate actually routes the public query
+    withEdgeLimit(0L) {
+      try {
+        val viaGate = SparkEntry.queries("q_graph_pagerank")(spark, dir)
+          .collect().toSeq
+        val top = b.sortBy(r => (-r.getLong(1), r.getString(0))).take(20)
+        assert(viaGate == top)
+      } finally CacheScope.release()
     }
   }
 
@@ -65,25 +75,19 @@ class GraphSpec extends AnyFunSuite {
     // ranks, so the co-partitioned shuffle path must reproduce the
     // broadcast trajectory EXACTLY over all nodes.
     val dir = "/root/testdata/sf0.01"
-    def ranks(shuffle: Boolean) = try
-      ops.GraphOps.pprRanks(spark, dir, shuffle)
-        .orderBy(col("node")).collect().toSeq
-    finally CacheScope.release()
-    val b = ranks(shuffle = false)
-    val sh = ranks(shuffle = true)
+    val (b, sh) = bothPaths(
+      ops.GraphOps.pprRanks(spark, dir).orderBy(col("node")))
     assert(b.nonEmpty && b == sh,
       s"broadcast/shuffle PPR diverge: ${b.take(3)} vs ${sh.take(3)}")
-    // and the conf gate actually routes the public query
-    spark.conf.set("spark.graft.pagerank.shuffleJoin", "true")
-    try {
-      val viaConf = SparkEntry.queries("q_graph_ppr")(spark, dir)
-        .collect().toSeq
-      val top = b.filter(_.getLong(1) > 0)
-        .sortBy(r => (-r.getLong(1), r.getString(0))).take(20)
-      assert(viaConf == top)
-    } finally {
-      spark.conf.unset("spark.graft.pagerank.shuffleJoin")
-      CacheScope.release()
+    // and the gate actually routes the public query
+    withEdgeLimit(0L) {
+      try {
+        val viaGate = SparkEntry.queries("q_graph_ppr")(spark, dir)
+          .collect().toSeq
+        val top = b.filter(_.getLong(1) > 0)
+          .sortBy(r => (-r.getLong(1), r.getString(0))).take(20)
+        assert(viaGate == top)
+      } finally CacheScope.release()
     }
   }
 
@@ -115,56 +119,37 @@ class GraphSpec extends AnyFunSuite {
 
   test("katz broadcast and shuffle-join paths are bit-identical") {
     val dir = "/root/testdata/sf0.01"
-    def top(shuffle: Boolean) = try
-      ops.GraphOps.katzWalks(spark, dir, shuffle).collect().toSeq
-    finally CacheScope.release()
-    val b = top(shuffle = false)
-    val sh = top(shuffle = true)
+    val (b, sh) = bothPaths(SparkEntry.queries("q_graph_katz")(spark, dir))
     assert(b.nonEmpty && b == sh,
       s"broadcast/shuffle Katz diverge: ${b.take(3)} vs ${sh.take(3)}")
   }
 
   test("triangles broadcast and shuffle-join paths are bit-identical") {
-    // Exact integer census — the conf-gated shuffled-hash path must
+    // Exact integer census — the gated shuffled-hash path must
     // reproduce every row (summary AND top list) of the broadcast path.
     val dir = "/root/testdata/sf0.01"
-    def result(shuffle: Boolean) = try
-      ops.GraphOps.trianglesResult(spark, dir, shuffle).collect().toSeq
-    finally CacheScope.release()
-    val b = result(shuffle = false)
-    val sh = result(shuffle = true)
+    val (b, sh) =
+      bothPaths(SparkEntry.queries("q_graph_triangles")(spark, dir))
     assert(b.nonEmpty && b == sh,
       s"broadcast/shuffle triangles diverge: ${b.take(3)} vs ${sh.take(3)}")
-    // and the conf gate actually routes the public query
-    spark.conf.set("spark.graft.triangles.shuffleJoin", "true")
-    try {
-      val viaConf = SparkEntry.queries("q_graph_triangles")(spark, dir)
+    // and the default limit routes the public query like the broadcast
+    // path at this scale
+    val viaDefault = try SparkEntry.queries("q_graph_triangles")(spark, dir)
         .collect().toSeq
-      assert(viaConf == b)
-    } finally {
-      spark.conf.unset("spark.graft.triangles.shuffleJoin")
-      CacheScope.release()
-    }
+      finally CacheScope.release()
+    assert(viaDefault == b)
   }
 
   test("clustering broadcast and shuffle-join paths are bit-identical") {
     val dir = "/root/testdata/sf0.01"
-    def result(shuffle: Boolean) = try
-      ops.GraphOps2.clusteringResult(spark, dir, shuffle).collect().toSeq
-    finally CacheScope.release()
-    val b = result(shuffle = false)
-    val sh = result(shuffle = true)
+    val (b, sh) =
+      bothPaths(SparkEntry.queries("q_graph_clustering")(spark, dir))
     assert(b.nonEmpty && b == sh,
       s"broadcast/shuffle clustering diverge: ${b.take(3)} vs ${sh.take(3)}")
-    spark.conf.set("spark.graft.clustering.shuffleJoin", "true")
-    try {
-      val viaConf = SparkEntry.queries("q_graph_clustering")(spark, dir)
+    val viaDefault = try SparkEntry.queries("q_graph_clustering")(spark, dir)
         .collect().toSeq
-      assert(viaConf == b)
-    } finally {
-      spark.conf.unset("spark.graft.clustering.shuffleJoin")
-      CacheScope.release()
-    }
+      finally CacheScope.release()
+    assert(viaDefault == b)
   }
 
   test("hits broadcast and shuffle-join paths are bit-identical") {
@@ -172,45 +157,82 @@ class GraphSpec extends AnyFunSuite {
     // (edges hash-partitioned on sup once, auth/hub vectors
     // shuffled-hash-joined) must replay the broadcast trajectory.
     val dir = "/root/testdata/sf0.01"
-    def result(shuffle: Boolean) = try
-      ops.CorpusOps22.hitsResult(spark, dir, shuffle).collect().toSeq
-    finally CacheScope.release()
-    val b = result(shuffle = false)
-    val sh = result(shuffle = true)
+    val (b, sh) = bothPaths(SparkEntry.queries("q_graph_hits")(spark, dir))
     assert(b.nonEmpty && b == sh,
       s"broadcast/shuffle HITS diverge: ${b.take(3)} vs ${sh.take(3)}")
-    spark.conf.set("spark.graft.hits.shuffleJoin", "true")
-    try {
-      val viaConf = SparkEntry.queries("q_graph_hits")(spark, dir)
+    val viaDefault = try SparkEntry.queries("q_graph_hits")(spark, dir)
         .collect().toSeq
-      assert(viaConf == b)
-    } finally {
-      spark.conf.unset("spark.graft.hits.shuffleJoin")
-      CacheScope.release()
-    }
+      finally CacheScope.release()
+    assert(viaDefault == b)
+  }
+
+  test("linkpred broadcast and shuffle-join paths are bit-identical") {
+    // Exact int64 Adamic-Adar sums and common-neighbor counts: the gated
+    // wedge join, existing-edge anti probe and degree join must give
+    // the same top-20 on both paths.
+    val dir = sf.replace("sf0.001", "sf0.01")
+    val (b, sh) =
+      bothPaths(SparkEntry.queries("q_graph_linkpred")(spark, dir))
+    assert(b.nonEmpty && b == sh,
+      s"broadcast/shuffle linkpred diverge: ${b.take(3)} vs ${sh.take(3)}")
   }
 
   test("auto gate: edge cardinality flips the graph family to shuffle") {
-    // With the path conf UNSET the gate reads the persisted edge
-    // cache's cardinality (StressBench r14 found the forced-broadcast
-    // census goes 13× superlinear once the co-purchase graph
-    // densifies). Force the crossover down to 1 edge: the public
-    // queries must plan shuffled-hash joins.
-    spark.conf.set("spark.graft.graph.broadcastEdgeLimit", "1")
+    // Every public graph query reads its measured size against the one
+    // limit. At 0 each must plan shuffled-hash joins; at Long.MaxValue
+    // none may (no data-scaling join side leaves the broadcast path).
+    def plan(name: String) = try SparkEntry.queries(name)(spark, sf)
+        .queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      finally CacheScope.release()
+    for (name <- gated) {
+      val sh = withEdgeLimit(0L)(plan(name))
+      assert(sh.contains("ShuffledHashJoin"),
+        s"$name ignored the gate at limit 0:\n$sh")
+      val b = withEdgeLimit(Long.MaxValue)(plan(name))
+      assert(!b.contains("ShuffledHashJoin"),
+        s"$name planned a shuffled-hash join at limit Long.MaxValue:\n$b")
+    }
+  }
+
+  test("graph queries never ask to cache already-cached data") {
+    // A builder that persists a frame it (or a helper) already persisted
+    // makes Spark's CacheManager warn and CacheScope track it twice;
+    // on the shuffle path a raw and a repartitioned |E| would both stay
+    // cached. Run every gated query on both paths and listen.
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    // start the session first: its startup may load Spark's default
+    // log4j profile, which would drop an appender attached before it
+    spark.sparkContext
+    val name = "org.apache.spark.sql.execution.CacheManager"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("cache-guard", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(name).asInstanceOf[Logger]
+    val level = logger.getLevel
+    Configurator.setLevel(name, Level.WARN)
+    logger.addAppender(appender)
     try {
-      for (name <- Seq("q_graph_triangles", "q_graph_clustering",
-          "q_graph_hits")) {
-        val p = SparkEntry.queries(name)(spark, sf)
-          .queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString(
-              "formatted"))
-        assert(p.contains("ShuffledHashJoin"),
-          s"$name ignored the auto gate:\n$p")
-        CacheScope.release()
+      for (q <- gated; limit <- Seq(0L, Long.MaxValue)) {
+        withEdgeLimit(limit) {
+          try SparkEntry.queries(q)(spark, sf).collect()
+          finally CacheScope.release()
+        }
+        val cached = seen.toArray.map(_.toString)
+          .filter(_.contains("already cached"))
+        assert(cached.isEmpty, s"$q at limit $limit: ${cached.toSeq}")
       }
     } finally {
-      spark.conf.unset("spark.graft.graph.broadcastEdgeLimit")
-      CacheScope.release()
+      logger.removeAppender(appender)
+      Configurator.setLevel(name, level)
+      appender.stop()
     }
   }
 
@@ -218,11 +240,7 @@ class GraphSpec extends AnyFunSuite {
     // Pure integer set filtering — the co-partitioned shuffle path must
     // reproduce the broadcast path exactly, rounds and top list included.
     val dir = "/root/testdata/sf0.01"
-    def result(shuffle: Boolean) = try
-      ops.GraphOps.kcoreResult(spark, dir, shuffle).collect().toSeq
-    finally CacheScope.release()
-    val b = result(shuffle = false)
-    val sh = result(shuffle = true)
+    val (b, sh) = bothPaths(SparkEntry.queries("q_graph_kcore")(spark, dir))
     assert(b.nonEmpty && b == sh,
       s"broadcast/shuffle k-core diverge: ${b.take(3)} vs ${sh.take(3)}")
   }

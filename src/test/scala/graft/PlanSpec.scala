@@ -375,11 +375,11 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("pagerank shuffle path: rank joins are co-partitioned, never broadcast") {
-    // The conf-gated scale path (|V| outgrows broadcast): edges are
-    // hash-partitioned on src once and persisted; deg and every
-    // per-iteration rank join must be shuffled-hash joins riding that
-    // partitioning, with NO broadcast of |V|-sized state anywhere.
-    val p = ops.GraphOps.pagerankRanks(spark, sf, shuffleJoin = true)
+    // The gated scale path (|V| past the edge limit, forced with 0):
+    // edges are hash-partitioned on src once and persisted; deg and
+    // every per-iteration rank join must be shuffled-hash joins riding
+    // that partitioning, with NO broadcast of |V|-sized state anywhere.
+    val p = withEdgeLimit(0L)(ops.GraphOps.pagerankRanks(spark, sf))
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     try {
@@ -401,10 +401,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("ppr shuffle path: rank joins are co-partitioned, never broadcast") {
-    // Personalized PageRank rides the same conf-gated core: on the
+    // Personalized PageRank rides the same gated core: on the
     // scale path no |V|-sized deg/rank state may broadcast (the seed,
     // a 1-row frame, is the only allowed non-edge-build broadcast).
-    val p = ops.GraphOps.pprRanks(spark, sf, shuffleJoin = true)
+    val p = withEdgeLimit(0L)(ops.GraphOps.pprRanks(spark, sf))
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     try {
@@ -450,7 +450,7 @@ class PlanSpec extends AnyFunSuite {
     // Scale path (|V| outgrows broadcast): each round's two endpoint
     // filters must run as shuffled-hash LEFT SEMI joins; the survivor
     // sets must never broadcast (only the edge-build pair joins may).
-    val p = ops.GraphOps.kcoreResult(spark, sf, shuffleJoin = true)
+    val p = withEdgeLimit(0L)(ops.GraphOps.qGraphKcore(spark, sf))
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     try {
@@ -478,7 +478,7 @@ class PlanSpec extends AnyFunSuite {
     // reach the wedge self-join and the closing-edge probe as
     // co-partitioned shuffled-hash joins; the only broadcasts allowed
     // are inside the edge build (lineitem pair join on l_orderkey).
-    val p = ops.GraphOps.trianglesResult(spark, sf, shuffleJoin = true)
+    val p = withEdgeLimit(0L)(ops.GraphOps.qGraphTriangles(spark, sf))
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     try {
@@ -492,10 +492,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("clustering shuffle path: deg/oriented-edge joins never broadcast") {
-    // Same contract as the triangles pin: on the conf-gated scale path
+    // Same contract as the triangles pin: on the gated scale path
     // no node- or edge-keyed state may ride a BroadcastExchange (the
     // 1-row global-transitivity crossJoin is a BNLJ, not a BHJ).
-    val p = ops.GraphOps2.clusteringResult(spark, sf, shuffleJoin = true)
+    val p = withEdgeLimit(0L)(ops.GraphOps2.qGraphClustering(spark, sf))
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     try {
@@ -515,7 +515,7 @@ class PlanSpec extends AnyFunSuite {
     // join the sup-partitioned edge stream; only the edge build
     // (l_orderkey/o_orderkey) may broadcast, and the per-round max is
     // a 1-row BNLJ crossJoin.
-    val p = ops.CorpusOps22.hitsResult(spark, sf, shuffleJoin = true)
+    val p = withEdgeLimit(0L)(ops.CorpusOps22.qGraphHits(spark, sf))
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     try {

@@ -13,4 +13,12 @@ object TestSpark {
       conf = Map("spark.sql.warehouse.dir" -> wh.getAbsolutePath))
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` with the graph family's one join-path limit set:
+    * 0 forces every graph operator onto its shuffle path,
+    * `Long.MaxValue` onto broadcast. */
+  def withEdgeLimit[T](limit: Long)(body: => T): T = {
+    spark.conf.set("spark.graft.graph.broadcastEdgeLimit", limit.toString)
+    try body finally spark.conf.unset("spark.graft.graph.broadcastEdgeLimit")
+  }
 }

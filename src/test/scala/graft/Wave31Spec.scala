@@ -102,16 +102,12 @@ class Wave31Spec extends AnyFunSuite {
 
   test("topic ppr: broadcast and shuffle-join paths are bit-identical") {
     val dir = "/root/testdata/sf0.01"
-    def top(shuffle: Boolean) = try {
-      if (shuffle)
-        spark.conf.set("spark.graft.pagerank.shuffleJoin", "true")
-      SparkEntry.queries("q_graph_ppr_topic")(spark, dir).collect().toSeq
-    } finally {
-      spark.conf.unset("spark.graft.pagerank.shuffleJoin")
-      CacheScope.release()
+    def top(limit: Long) = withEdgeLimit(limit) {
+      try SparkEntry.queries("q_graph_ppr_topic")(spark, dir).collect().toSeq
+      finally CacheScope.release()
     }
-    val b = top(shuffle = false)
-    val sh = top(shuffle = true)
+    val b = top(Long.MaxValue)
+    val sh = top(0L)
     assert(b.nonEmpty && b == sh,
       s"broadcast/shuffle topic-PPR diverge: ${b.take(3)} vs ${sh.take(3)}")
   }
